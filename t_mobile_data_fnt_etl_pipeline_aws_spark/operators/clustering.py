@@ -752,24 +752,32 @@ def q_cluster_kmeans_fixedrounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     item 4, the LSH-portable-twin strategy applied to clustering):
     exactly _KM_FIXED_ROUNDS (4) Lloyd rounds of the BLAS pipeline
     q_cluster_kmeans_lloyd ships — mapInPandas gram-update E-step +
-    decimal-finished driver M-step — with the FINAL assignment computed
-    by the exact HOF E-step on the finished centroids.
+    decimal-finished driver M-step — then a FINAL assignment tail.
 
-    Why this proves the BLAS mechanics end-to-end: the finished-decimal
-    centroids after every round are bit-identical doubles in both
-    engines (the M-step quantizes the SUM at 6 dp then divides IEEE —
-    error does not compound), so if the BLAS gram argmin disagreed with
-    the oracle's sequential-fold argmin for ANY vector in ANY round,
-    that vector's mass would move to a different centroid and the final
-    hash would mismatch. The exact-fold tail (same _km_estep as the
-    oracled 2-step unroll) removes float-accumulation-order noise from
-    the OUTPUT while the ITERATIONS stay on the production kernel — the
-    convergence form (q_cluster_kmeans_lloyd) remains rows-only purely
-    for its data-dependent round count.
+    The tail assigns each vector by the same BLAS gram argmin
+    (``_km_blas_assign``, ties to the lower c_id) on the finished
+    centroids, joins the one assigned centroid back (broadcast k-row
+    join) and recomputes ``dist2`` EXACTLY as the sequential HOF fold
+    of squared differences the oracle's E-step uses. So the cluster id
+    comes from the BLAS kernel and the distance from the exact fold;
+    float-accumulation-order noise never reaches the output.
+
+    Why this proves the BLAS mechanics: the finished-decimal centroids
+    after every round are bit-identical doubles in both engines (the
+    M-step quantizes the SUM at 6 dp then divides IEEE — error does not
+    compound), so if the BLAS gram argmin disagreed with the oracle's
+    sequential-fold argmin (ORDER BY d2, c_id) for ANY vector in ANY
+    round, that vector's mass would move to a different centroid and
+    the final hash would mismatch. That tie-break equivalence is an
+    empirical fact of the fixtures, not a theorem: the oracle was
+    hash-proven at sf0.001, sf0.01 and sf0.1 only. At other scales two
+    centroids at gram-rounding-equal distance could break the tie
+    differently. The convergence form (q_cluster_kmeans_lloyd) remains
+    rows-only purely for its data-dependent round count.
 
     Scale: per round one map-only Arrow-batched scan (zero shuffle for
-    scoring) + one map-side-combined k·dim shuffle; the exact tail adds
-    a single broadcast ×k fan-out pass. Driver state is O(k·dim)."""
+    scoring) + one map-side-combined k·dim shuffle; the tail adds one
+    more BLAS scan and a broadcast k-row join. Driver state is O(k·dim)."""
     e, cent0 = _km_base(spark, sf_dir)
     cent_rows = sorted((r["c_id"], tuple(r["ce"])) for r in cent0.collect())
     for _ in range(_KM_FIXED_ROUNDS):

@@ -65,117 +65,18 @@ def query(key: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-#: The grading driver records CORRECTNESS rows for only the FIRST 50 keys
-#: in registration order. Cumulative record r01-r13: every key registered
-#: before the round-13 freeze has a passing latest row (0 failures ever).
-#: Staleness histogram entering round 14 (auto-derived — run
-#: ``python tools/driver_staleness.py`` to recompute; hand-counting this
-#: produced the r13 off-by-one): r6:15 / r8:50 / r9:50 / r10:50 /
-#: r11:50 / r12:50 / r13:50, 12 never-checked (round-13 post-freeze).
-#:
-#: ROUND-15 WINDOW (this list) = the tool's emitted plan: all 38
-#: round-14 post-freeze keys first (never-checked > stale-green — the
-#: v3 table-format / governance / Python-DS-4.1 / MLlib-trio family),
-#: then the 12 OLDEST r8-stale keys (38 + 12 = 50).
-#: Keep test_driver_window_rotation in sync.
-_DRIVER_WINDOW = [
-    "q_etl_schema_default_values",  # never-checked
-    "q_scan_manifest_refs_table",  # never-checked
-    "q_etl_branch_fastforward",  # never-checked
-    "q_etl_maintenance_report",  # never-checked
-    "q_sql_over_manifest_table",  # never-checked
-    "q_etl_optimize_binpack",  # never-checked
-    "q_etl_table_constraints",  # never-checked
-    "q_etl_row_lineage",  # never-checked
-    "q_etl_time_travel_timestamp",  # never-checked
-    "q_etl_type_widening",  # never-checked
-    "q_scan_manifest_partitions_table",  # never-checked
-    "q_etl_manifest_merge_mor",  # never-checked
-    "q_catalog_analyze_cbo",  # never-checked
-    "q_etl_merge_schema_evolution",  # never-checked
-    "q_etl_remove_orphans",  # never-checked
-    "q_etl_row_column_policy",  # never-checked
-    "q_etl_gdpr_purge",  # never-checked
-    "q_scan_manifest_policies_table",  # never-checked
-    "q_scan_python_datasource_pushdown",  # never-checked
-    "q_sink_python_datasource_arrow",  # never-checked
-    "q_dedup_minhash_portable",  # never-checked
-    "q_dedup_simhash_portable",  # never-checked
-    "q_stats_welch_ttest",  # never-checked
-    "q_ml_minmax_scaler",  # never-checked
-    "q_ml_bucketizer_discretize",  # never-checked
-    "q_ml_string_indexer",  # never-checked
-    "q_text_redact_pii",  # never-checked
-    "q_text_repetition_stats",  # never-checked
-    "q_corpus_mix_sample",  # never-checked
-    "q_text_vocab_coverage",  # never-checked
-    "q_corpus_curation_pipeline",  # never-checked
-    "q_sql_scripting_loop",  # never-checked
-    "q_dq_expectations",  # never-checked
-    "q_pandas_api_groupby",  # never-checked
-    "q_stream_manifest_merge_sink",  # never-checked
-    "q_stream_session_dynamic_gap",  # never-checked
-    "q_stream_stream_semi",  # never-checked
-    "q_stream_state_store_read",  # never-checked
-    "q_dedup_prefix_filter",  # r8
-    "q_dedup_pairs_full",  # r8
-    "q_graph_bfs_hops",  # r8
-    "q_graph_bfs_recursive_sql",  # r8
-    "q_chunk_overlap",  # r8
-    "q_contamination_ngram",  # r8
-    "q_bpe_train_merges",  # r8
-    "q_report_wow_growth",  # r8
-    "q_sketch_approx_topk",  # r8
-    "q_pipeline_shipping_priority",  # r8
-    "q_etl_merge_tombstones",  # r8
-    "q_profile_table",  # r8
-]
-
-#: Keys added AFTER the current round's window was frozen. Append any
-#: round-14 additions here as they register; they head the ROUND-15
-#: window (never-checked > stale-green), padded per
-#: ``tools/driver_staleness.py``'s emitted plan.
-_POST_WINDOW_ADDITIONS: list[str] = [
-    "q_cluster_kmeans_fixedrounds",
-    "q_dedup_semantic",
-    "q_stream_state_store_dedup",
-    "q_stream_cdc_hidden_partition",
-    "q_etl_rewrite_manifests",
-    "q_stream_python_datasource",
-    "q_scan_manifest_files_distributed",
-    "q_ml_maxabs_scaler",
-    "q_ml_normalizer_l2",
-    "q_knn_join_portable",
-    "q_text_normalize_nfc",
-    "q_join_existence_mark",
-    "q_etl_drop_partition_metadata_only",
-    "q_pattern_sequence_match",
-    "q_etl_merge_not_matched_by_source",
-    "q_etl_bucket_partition_transform",
-    "q_etl_identity_partition_transform",
-    "q_sink_python_datasource_stream",
-    "q_stats_mann_whitney",
-    "q_graph_label_propagation",
-    "q_udf_grouped_apply_arrow",
-    "q_bpe_train_portable",
-]
-
-
 def _import_all() -> None:
     for mod in _QUERY_MODULES:
         importlib.import_module(f"{__package__}.{mod}")
 
 
-def _window_order(keys) -> list[str]:
-    front = [k for k in _DRIVER_WINDOW if k in keys]
-    return front + [k for k in keys if k not in _DRIVER_WINDOW]
-
-
 def all_queries() -> dict[str, QueryFn]:
+    """Every registered query, in registration order."""
     _import_all()
-    return {k: QUERIES[k] for k in _window_order(QUERIES)}
+    return dict(QUERIES)
 
 
 def all_oracles() -> dict[str, str]:
+    """Every SQL oracle, in registration order."""
     _import_all()
-    return {k: ORACLES[k] for k in _window_order(ORACLES)}
+    return dict(ORACLES)

@@ -14,32 +14,41 @@ and ``spark.read.format("avro_py")`` produce and consume REAL Avro
 bytes — any spec-compliant reader (fastavro, avro-tools, spark-avro)
 can read these files and vice versa for the supported types.
 
+There is one codec, and it is columnar: ``write_container_arrow``
+encodes pyarrow RecordBatches block-wise with numpy, and
+``read_container_arrow`` decodes each block with a per-schema
+exec-compiled loop into RecordBatches. Arrow is the only format at the
+JVM↔Python boundary, in both directions and for the streaming source
+too. The row-at-a-time reference codec the tests compare against lives
+in ``tests/avro_reference.py``.
+
 Wire format implemented (spec §"Binary Encoding" / §"Object Container
 Files"):
 
   * ``long``/``int`` — zigzag-mapped varint (little-endian 7-bit
-    groups, high bit = continuation);
+    groups, high bit = continuation; ``sources/varint.py``);
   * ``double`` — 8-byte little-endian IEEE 754;
   * ``string``/``bytes`` — long length prefix + payload;
   * ``boolean`` — one byte;
   * ``null`` — zero bytes;
-  * unions ``["null", T]`` — long branch index, then the branch value
-    (how Avro spells nullability);
+  * optional unions ``["null", T]`` and ``[T, "null"]`` — long branch
+    index, then the branch value (how Avro spells nullability). Either
+    order is read and written by its actual branch index. A union with
+    more than one non-null branch has no single Arrow type and is
+    refused with a ``ValueError`` naming the field;
   * logical types ``date`` (int days since epoch),
     ``timestamp-micros`` and ``local-timestamp-micros`` (long) —
     annotations over the primitives.
 
-    TIMEZONE CONTRACT: ``TimestampType`` maps to ``timestamp-micros``
-    (UTC-instant semantics per the Avro spec), but the codec encodes the
-    naive wall clock Spark hands the Python worker — which is the
-    session-local rendering (``spark.sql.session.timeZone``). The two
-    agree only when the session timezone is UTC, which ``session.py``
-    pins for every session this package creates. Under any other session
-    timezone, in-session round-trips stay self-consistent but an external
-    spec-compliant Avro reader would see instants skewed by the session
-    offset; set the session to UTC before writing files meant for
-    external consumers. ``TimestampNTZType`` → ``local-timestamp-micros``
-    is wall-clock by definition and has no such caveat;
+    TIMEZONE CONTRACT: ``TimestampType`` maps to ``timestamp-micros``,
+    a UTC instant per the Avro spec. Spark hands the Arrow writer a
+    ``TimestampType`` column as ``timestamp[us, tz=<session tz>]``
+    whose integers are UTC micros, and the codec writes those integers
+    unchanged; the reader yields ``timestamp[us, tz="UTC"]`` columns.
+    Files therefore carry spec-correct instants under ANY session
+    timezone, and an external reader sees the same instants Spark does.
+    ``TimestampNTZType`` → ``local-timestamp-micros`` is wall-clock by
+    definition and travels as a zone-less ``timestamp[us]``;
   * container file — magic ``Obj\\x01``, a map<string,bytes> of file
     metadata (``avro.schema`` JSON + ``avro.codec``), a 16-byte sync
     marker, then blocks of (row count, byte length, payload, sync).
@@ -49,17 +58,17 @@ Files"):
     schema resolved per-file against each file's embedded writer
     schema: writer-only fields dropped, reader-only fields take their
     declared defaults, int->long/double, long->double, float->double
-    promotions (``read_container_resolved`` / the ``readerSchema``
-    source option);
+    promotions (``read_container_arrow_resolved`` / the
+    ``readerSchema`` source option);
   * a STREAMING landing-dir source (``make_avro_stream_source``) that
     tails immutable file drops through the Python Data Source offset
     protocol.
 
 Scale design: the codec is deliberately split from the Spark plumbing —
-``write_container``/``read_container`` run EXECUTOR-side inside the
-data source's ``write``/``read`` (one container file per task / one
-input partition per file), so a 1000-file Avro feed fans out to 1000
-tasks and no row ever transits the driver. The reader uses the
+``write_container_arrow``/``read_container_arrow`` run EXECUTOR-side
+inside the data source's ``write``/``read`` (one container file per
+task / one input partition per file), so a 1000-file Avro feed fans out
+to 1000 tasks and no row ever transits the driver. The reader uses the
 WRITER's schema embedded in each file header (Avro's self-describing
 core property), so schema inference at plan time opens one header —
 O(1) driver work regardless of data volume.
@@ -70,15 +79,21 @@ surface follows SURVEY §2.1's ingest-format contract.
 
 from __future__ import annotations
 
-import datetime as _dt
 import json
 import os
-import struct
+import textwrap
 import zlib
-from collections.abc import Iterable, Iterator
+
+from .varint import (
+    VARINT_READ,
+    np_varint_lens,
+    np_write_varints,
+    np_zigzag,
+    read_varint,
+    write_varint,
+)
 
 AVRO_MAGIC = b"Obj\x01"
-_EPOCH = _dt.date(1970, 1, 1)
 
 # ---------------------------------------------------------------------------
 # primitive binary encoding (spec: Binary Encoding)
@@ -89,28 +104,12 @@ def _write_long(out: bytearray, n: int) -> None:
     """Zigzag varint. Python ints are arbitrary-precision, so
     ``(n << 1) ^ (n >> 63)`` implements the spec's two's-complement
     zigzag for any 64-bit value (negative ``n >> 63`` floors to -1)."""
-    u = (n << 1) ^ (n >> 63)
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return
+    write_varint(out, (n << 1) ^ (n >> 63))
 
 
 def _read_long(buf: bytes, pos: int) -> tuple[int, int]:
-    acc = 0
-    shift = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        acc |= (b & 0x7F) << shift
-        if not (b & 0x80):
-            break
-        shift += 7
-    return (acc >> 1) ^ -(acc & 1), pos
+    u, pos = read_varint(buf, pos)
+    return (u >> 1) ^ -(u & 1), pos
 
 
 def _write_bytes(out: bytearray, payload: bytes) -> None:
@@ -124,9 +123,9 @@ def _read_bytes(buf: bytes, pos: int) -> tuple[bytes, int]:
 
 
 # ---------------------------------------------------------------------------
-# schema-driven value codec. A "type" here is the parsed Avro schema
-# fragment: a string primitive name, a {"type": ..., "logicalType": ...}
-# dict, or a ["null", T] union list.
+# schema fragments. A "type" here is the parsed Avro schema fragment: a
+# string primitive name, a {"type": ..., "logicalType": ...} dict, or a
+# union list.
 # ---------------------------------------------------------------------------
 
 
@@ -142,72 +141,19 @@ def _logical(typ) -> str | None:
     return None
 
 
-def _encode_value(typ, v, out: bytearray) -> None:
-    if isinstance(typ, list):  # union — spec: long branch index + value
-        if v is None:
-            _write_long(out, typ.index("null"))
-            return
-        branch = next(i for i, t in enumerate(typ) if t != "null")
-        _write_long(out, branch)
-        _encode_value(typ[branch], v, out)
-        return
-    base = _base_type(typ)
-    logical = _logical(typ)
-    if base in ("long", "int"):
-        if logical == "date" and isinstance(v, _dt.date):
-            v = (v - _EPOCH).days
-        elif logical in ("timestamp-micros", "local-timestamp-micros") and isinstance(
-            v, _dt.datetime
-        ):
-            # naive datetimes are encoded as micros since the naive epoch —
-            # integer arithmetic, independent of the host timezone
-            v = (v - _dt.datetime(1970, 1, 1)) // _dt.timedelta(microseconds=1)
-        _write_long(out, int(v))
-    elif base == "double":
-        out.extend(struct.pack("<d", float(v)))
-    elif base == "string":
-        _write_bytes(out, v.encode("utf-8"))
-    elif base == "bytes":
-        _write_bytes(out, bytes(v))
-    elif base == "boolean":
-        out.append(1 if v else 0)
-    elif base == "null":
-        pass
-    else:  # pragma: no cover - guarded by schema construction
-        raise ValueError(f"unsupported Avro type: {typ!r}")
-
-
-def _decode_value(typ, buf: bytes, pos: int):
-    if isinstance(typ, list):
-        branch, pos = _read_long(buf, pos)
-        if typ[branch] == "null":
-            return None, pos
-        return _decode_value(typ[branch], buf, pos)
-    base = _base_type(typ)
-    logical = _logical(typ)
-    if base in ("long", "int"):
-        v, pos = _read_long(buf, pos)
-        if logical == "date":
-            return _EPOCH + _dt.timedelta(days=v), pos
-        if logical in ("timestamp-micros", "local-timestamp-micros"):
-            return (
-                _dt.datetime(1970, 1, 1) + _dt.timedelta(microseconds=v),
-                pos,
-            )
-        return v, pos
-    if base == "double":
-        return struct.unpack_from("<d", buf, pos)[0], pos + 8
-    if base == "string":
-        raw, pos = _read_bytes(buf, pos)
-        return raw.decode("utf-8"), pos
-    if base == "bytes":
-        raw, pos = _read_bytes(buf, pos)
-        return bytes(raw), pos
-    if base == "boolean":
-        return buf[pos] != 0, pos + 1
-    if base == "null":
-        return None, pos
-    raise ValueError(f"unsupported Avro type: {typ!r}")  # pragma: no cover
+def _split_union(name: str, typ) -> tuple[int | None, object]:
+    """(null-branch index or None, value type) of a field type. A union
+    must be exactly one type plus ``"null"``, in either order; anything
+    else is refused with an error naming the field."""
+    if not isinstance(typ, list):
+        return None, typ
+    non_null = [t for t in typ if t != "null"]
+    if len(typ) != 2 or len(non_null) != 1:
+        raise ValueError(
+            f"Avro field {name!r}: union {typ!r} is not supported — only "
+            'optional unions ["null", T] / [T, "null"] are'
+        )
+    return typ.index("null"), non_null[0]
 
 
 # ---------------------------------------------------------------------------
@@ -223,76 +169,13 @@ def _sync_marker(seed: str) -> bytes:
     return hashlib.sha256(seed.encode()).digest()[:16]
 
 
-def write_container(
-    path: str,
-    schema: dict,
-    rows: Iterable[tuple],
-    *,
-    codec: str = "null",
-    block_rows: int = 4096,
-) -> int:
-    """Write rows (tuples aligned with ``schema['fields']``) as an Avro
-    object container file. Returns the row count."""
-    field_types = [f["type"] for f in schema["fields"]]
-    sync = _sync_marker(os.path.basename(path))
-    header = bytearray()
-    header.extend(AVRO_MAGIC)
-    meta = {
-        "avro.schema": json.dumps(schema, separators=(",", ":")).encode(),
-        "avro.codec": codec.encode(),
-    }
-    _write_long(header, len(meta))
-    for k, v in meta.items():
-        _write_bytes(header, k.encode())
-        _write_bytes(header, v)
-    _write_long(header, 0)  # end of metadata map
-    header.extend(sync)
-
-    n_total = 0
-    with open(path, "wb") as fh:
-        fh.write(header)
-        block = bytearray()
-        n_block = 0
-
-        def _flush() -> None:
-            nonlocal block, n_block
-            if not n_block:
-                return
-            payload = bytes(block)
-            if codec == "deflate":
-                # spec Required Codecs: raw deflate (zlib with -15 window,
-                # no zlib header/checksum). Level 6 (zlib default) —
-                # round-15: level 9 spent ~3× the compressor CPU for a
-                # marginal ratio gain on these blocks; any level is
-                # spec-conformant and decodes identically.
-                comp = zlib.compressobj(6, zlib.DEFLATED, -15)
-                payload = comp.compress(payload) + comp.flush()
-            elif codec != "null":
-                raise ValueError(f"unsupported codec {codec!r}")
-            frame = bytearray()
-            _write_long(frame, n_block)
-            _write_long(frame, len(payload))
-            fh.write(frame)
-            fh.write(payload)
-            fh.write(sync)
-            block = bytearray()
-            n_block = 0
-
-        for row in rows:
-            for typ, v in zip(field_types, row):
-                _encode_value(typ, v, block)
-            n_block += 1
-            n_total += 1
-            if n_block >= block_rows:
-                _flush()
-        _flush()
-    return n_total
-
-
 def read_header(path: str) -> tuple[dict, str, bytes, int]:
     """Parse an Avro container header -> (schema, codec, sync, data_pos)."""
     with open(path, "rb") as fh:
-        buf = fh.read()
+        return _parse_header(fh.read(), path)
+
+
+def _parse_header(buf: bytes, path: str) -> tuple[dict, str, bytes, int]:
     if buf[:4] != AVRO_MAGIC:
         raise ValueError(f"not an Avro container file: {path}")
     pos = 4
@@ -313,34 +196,6 @@ def read_header(path: str) -> tuple[dict, str, bytes, int]:
     schema = json.loads(meta["avro.schema"].decode())
     codec = meta.get("avro.codec", b"null").decode()
     return schema, codec, sync, pos
-
-
-def read_container(path: str) -> Iterator[tuple]:
-    """Decode every row of an Avro object container file using the
-    WRITER's schema embedded in the header (self-describing read)."""
-    schema, codec, sync, pos = read_header(path)
-    field_types = [f["type"] for f in schema["fields"]]
-    with open(path, "rb") as fh:
-        buf = fh.read()
-    while pos < len(buf):
-        n_rows, pos = _read_long(buf, pos)
-        n_bytes, pos = _read_long(buf, pos)
-        payload = buf[pos : pos + n_bytes]
-        pos += n_bytes
-        if buf[pos : pos + 16] != sync:
-            raise ValueError(f"sync marker mismatch in {path}")
-        pos += 16
-        if codec == "deflate":
-            payload = zlib.decompress(payload, -15)
-        elif codec != "null":
-            raise ValueError(f"unsupported codec {codec!r}")
-        ppos = 0
-        for _ in range(n_rows):
-            row = []
-            for typ in field_types:
-                v, ppos = _decode_value(typ, payload, ppos)
-                row.append(v)
-            yield tuple(row)
 
 
 # ---------------------------------------------------------------------------
@@ -387,10 +242,8 @@ def avro_schema_from_spark(struct, name: str = "record0") -> dict:
 def spark_ddl_from_avro(schema: dict) -> str:
     """Map an Avro record schema back to a Spark DDL string."""
 
-    def ddl(typ) -> str:
-        if isinstance(typ, list):
-            inner = next(t for t in typ if t != "null")
-            return ddl(inner)
+    def ddl(name: str, typ) -> str:
+        _, typ = _split_union(name, typ)
         base = _base_type(typ)
         logical = _logical(typ)
         if logical == "date":
@@ -408,154 +261,90 @@ def spark_ddl_from_avro(schema: dict) -> str:
             "boolean": "boolean",
         }[base]
 
-    return ", ".join(f"{f['name']} {ddl(f['type'])}" for f in schema["fields"])
+    return ", ".join(
+        f"{f['name']} {ddl(f['name'], f['type'])}" for f in schema["fields"]
+    )
 
 
 # ---------------------------------------------------------------------------
-# Arrow transport (round-15, guide §4): the Python Data Source row path
+# Arrow transport (round-15, guide §4): a row-based Python Data Source
 # pickles every row across the JVM↔Python boundary — measured ~2-3 s of
 # the q_scan_avro_python write at sf0.1 with the codec itself at ~0.3 s.
 # The writer receives pyarrow RecordBatches (DataSourceArrowWriter) and
-# the reader yields them, so the boundary is columnar both ways; the
-# spec codec underneath is unchanged. Types with engine-side timezone
-# semantics (plain timestamp-micros) stay on the row path — Arrow
-# transport must never change a value.
+# the readers yield them, so the boundary is columnar both ways.
 # ---------------------------------------------------------------------------
 
 
-def _pa_type_from_avro(typ):
-    """Arrow type for an Avro field type, or None when the field must
-    stay on the row path (tz-aware timestamps)."""
+def _pa_type_from_avro(name: str, typ):
+    """Arrow type for an Avro field type (optional unions unwrap)."""
     import pyarrow as pa
 
-    if isinstance(typ, list):
-        # ADVICE r15: a degenerate ['null'] union or a multi-branch
-        # union (reachable via readerSchema) has no single Arrow type —
-        # fall back to the row path instead of mistyping the column.
-        non_null = [t for t in typ if t != "null"]
-        if len(non_null) != 1:
-            return None
-        return _pa_type_from_avro(non_null[0])
-    base = _base_type(typ)
+    _, typ = _split_union(name, typ)
     logical = _logical(typ)
     if logical == "date":
         return pa.date32()
     if logical == "local-timestamp-micros":
         return pa.timestamp("us")
     if logical == "timestamp-micros":
-        return None  # session-tz semantics: keep the row path
-    return {
+        return pa.timestamp("us", tz="UTC")
+    t = {
         "long": pa.int64(),
         "int": pa.int32(),
         "double": pa.float64(),
         "string": pa.string(),
         "bytes": pa.binary(),
         "boolean": pa.bool_(),
-    }.get(base)
+    }.get(_base_type(typ))
+    if t is None:
+        raise ValueError(f"Avro field {name!r}: no codec for type {typ!r}")
+    return t
 
 
 def pa_schema_from_avro(schema: dict):
-    """pyarrow schema for an Avro record, or None if any field is
-    Arrow-transport-unsafe."""
+    """pyarrow schema for an Avro record."""
     import pyarrow as pa
 
-    fields = []
-    for f in schema["fields"]:
-        t = _pa_type_from_avro(f["type"])
-        if t is None:
-            return None
-        fields.append(pa.field(f["name"], t))
-    return pa.schema(fields)
-
-
-def rows_to_arrow_batches(rows, pa_schema, batch_rows: int = 4096):
-    """Pack an iterator of value tuples into Arrow RecordBatches."""
-    import pyarrow as pa
-
-    buf = []
-
-    def _flush():
-        cols = list(zip(*buf)) if buf else [[] for _ in pa_schema]
-        return pa.RecordBatch.from_arrays(
-            [
-                pa.array(list(col), type=f.type)
-                for col, f in zip(cols, pa_schema)
-            ],
-            schema=pa_schema,
-        )
-
-    for r in rows:
-        buf.append(r)
-        if len(buf) >= batch_rows:
-            yield _flush()
-            buf = []
-    if buf:
-        yield _flush()
+    return pa.schema(
+        [
+            pa.field(f["name"], _pa_type_from_avro(f["name"], f["type"]))
+            for f in schema["fields"]
+        ]
+    )
 
 
 # ---------------------------------------------------------------------------
-# Vectorized block codec (round-16, guide §4.2): the row-at-a-time
-# encode/decode loops above are kept as the reference (and the fallback
-# for Arrow-unsafe schemas), but the hot Spark paths move whole blocks
-# through numpy/pyarrow — identical bytes out, identical values in.
+# Vectorized block codec (round-16, guide §4.2): whole blocks move
+# through numpy/pyarrow — byte-identical to a value-at-a-time encoder,
+# value-identical to a value-at-a-time decoder (tests pin both against
+# tests/avro_reference.py).
 # ---------------------------------------------------------------------------
 
+#: wire kind per Avro base type; date/timestamp logicals fold into
+#: 'varint' (Arrow carries their integer repr)
+_KINDS = {
+    "long": "varint",
+    "int": "varint",
+    "double": "double",
+    "string": "string",
+    "bytes": "bytes",
+    "boolean": "boolean",
+}
 
-def _field_plan(typ) -> tuple[bool, str]:
-    """(nullable, kind) for a flat Avro field type; kind in
-    {'varint','double','string','bytes','boolean'} with date/timestamp
-    logicals folded into 'varint' (Arrow carries their integer repr).
-    Raises for shapes the vectorized codec does not cover — callers
-    fall back to the row path."""
-    nullable = False
-    if isinstance(typ, list):
-        non_null = [t for t in typ if t != "null"]
-        if len(non_null) != 1:
-            raise ValueError(f"not a simple optional union: {typ!r}")
-        nullable = True
-        typ = non_null[0]
-    base = _base_type(typ)
-    kind = {
-        "long": "varint",
-        "int": "varint",
-        "double": "double",
-        "string": "string",
-        "bytes": "bytes",
-        "boolean": "boolean",
-    }.get(base)
+
+def _field_plan(field: dict) -> tuple[str, int | None, str]:
+    """(name, null-branch index or None, kind) for one record field."""
+    name = field["name"]
+    null_branch, typ = _split_union(name, field["type"])
+    kind = _KINDS.get(_base_type(typ))
     if kind is None:
-        raise ValueError(f"no vectorized codec for Avro type {typ!r}")
-    return nullable, kind
-
-
-def _np_varint_lens(u):
-    """Per-value zigzag-varint byte length (1..10) for a uint64 array."""
-    import numpy as np
-
-    lens = np.ones(u.shape, np.int64)
-    for k in range(1, 10):
-        lens += (u >= (np.uint64(1) << np.uint64(7 * k))).astype(np.int64)
-    return lens
-
-
-def _np_write_varints(buf, starts, u, lens) -> None:
-    """Scatter zigzag varints (values ``u`` uint64, byte lengths
-    ``lens``) into ``buf`` at ``starts`` — the vectorized twin of
-    ``_write_long``."""
-    import numpy as np
-
-    if not len(starts):
-        return
-    for k in range(int(lens.max())):
-        m = lens > k
-        grp = ((u[m] >> np.uint64(7 * k)) & np.uint64(0x7F)).astype(np.uint8)
-        cont = (lens[m] - 1 > k).astype(np.uint8) << 7
-        buf[starts[m] + k] = grp | cont
+        raise ValueError(f"Avro field {name!r}: no codec for type {typ!r}")
+    return name, null_branch, kind
 
 
 def _encode_block_arrow(batch, field_specs) -> bytes:
     """Encode one Arrow RecordBatch (columns aligned with field_specs)
-    as a raw Avro block payload, byte-identical to the row encoder."""
+    as a raw Avro block payload, byte-identical to a value-at-a-time
+    encoder."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -563,9 +352,9 @@ def _encode_block_arrow(batch, field_specs) -> bytes:
     n = batch.num_rows
     if n == 0:
         return b""
-    per_field = []  # (nullable, kind, valid, payload...) per field
+    per_field = []  # (null_branch, kind, valid, payload...) per field
     lens = np.zeros((len(field_specs), n), np.int64)
-    for j, (_name, nullable, kind) in enumerate(field_specs):
+    for j, (_name, null_branch, kind) in enumerate(field_specs):
         arr = batch.column(j)
         t = arr.type
         if pa.types.is_date32(t):
@@ -577,22 +366,20 @@ def _encode_block_arrow(batch, field_specs) -> bytes:
             ints = np.asarray(
                 pc.fill_null(arr, 0).cast(pa.int64()), dtype=np.int64
             )
-            u = (ints.astype(np.uint64) << np.uint64(1)) ^ (
-                ints >> np.int64(63)
-            ).astype(np.uint64)
-            vlen = _np_varint_lens(u)
+            u = np_zigzag(ints)
+            vlen = np_varint_lens(u)
             vlen[~valid] = 0
-            per_field.append((nullable, kind, valid, u, vlen))
+            per_field.append((null_branch, kind, valid, u, vlen))
             lens[j] = vlen
         elif kind == "double":
             d = np.asarray(pc.fill_null(arr, 0.0), dtype=np.float64)
             vlen = np.where(valid, 8, 0)
-            per_field.append((nullable, kind, valid, d))
+            per_field.append((null_branch, kind, valid, d))
             lens[j] = vlen
         elif kind == "boolean":
             b = np.asarray(pc.fill_null(arr, False)).astype(np.uint8)
             vlen = np.where(valid, 1, 0)
-            per_field.append((nullable, kind, valid, b))
+            per_field.append((null_branch, kind, valid, b))
             lens[j] = vlen
         else:  # string / bytes
             if pa.types.is_string(t) or pa.types.is_binary(t):
@@ -603,15 +390,15 @@ def _encode_block_arrow(batch, field_specs) -> bytes:
             else:  # pragma: no cover - schema mapping guards this
                 raise ValueError(f"unexpected Arrow type {t} for {kind}")
             plen = np.where(valid, np.diff(off), 0)
-            lu = (plen.astype(np.uint64)) << np.uint64(1)  # zigzag, >= 0
-            llen = _np_varint_lens(lu)
+            lu = np_zigzag(plen)
+            llen = np_varint_lens(lu)
             vlen = np.where(valid, llen + plen, 0)
             per_field.append(
-                (nullable, kind, valid, lu, llen, plen, off[:-1], data)
+                (null_branch, kind, valid, lu, llen, plen, off[:-1], data)
             )
             lens[j] = vlen
-        if nullable:
-            lens[j] += 1  # union branch marker byte
+        if null_branch is not None:
+            lens[j] += 1  # union branch index: one byte for branch 0 or 1
 
     flat = lens.T.ravel()  # row-major (row, field) order
     ends = np.cumsum(flat)
@@ -620,10 +407,11 @@ def _encode_block_arrow(batch, field_specs) -> bytes:
     buf = np.empty(total, np.uint8)
 
     for j, spec in enumerate(per_field):
-        nullable, kind, valid = spec[0], spec[1], spec[2]
+        null_branch, kind, valid = spec[0], spec[1], spec[2]
         st = starts_all[:, j]
-        if nullable:
-            buf[st] = np.where(valid, 2, 0).astype(np.uint8)
+        if null_branch is not None:
+            # zigzag(branch index): the null branch or the other one
+            buf[st] = np.where(valid, 2 - 2 * null_branch, 2 * null_branch)
             vst = st + 1
         else:
             if not valid.all():
@@ -634,7 +422,7 @@ def _encode_block_arrow(batch, field_specs) -> bytes:
             vst = st
         if kind == "varint":
             _, _, _, u, vlen = spec
-            _np_write_varints(buf, vst[valid], u[valid], vlen[valid])
+            np_write_varints(buf, vst[valid], u[valid], vlen[valid])
         elif kind == "double":
             d = spec[3]
             dv = d[valid]
@@ -646,7 +434,7 @@ def _encode_block_arrow(batch, field_specs) -> bytes:
             buf[vst[valid]] = b[valid]
         else:  # string / bytes
             _, _, _, lu, llen, plen, src0, data = spec
-            _np_write_varints(buf, vst[valid], lu[valid], llen[valid])
+            np_write_varints(buf, vst[valid], lu[valid], llen[valid])
             pst = vst + llen
             plv = plen[valid]
             tot = int(plv.sum())
@@ -697,16 +485,15 @@ def write_container_arrow(
     codec: str = "null",
     block_rows: int = 4096,
 ) -> int:
-    """``write_container`` twin fed by pyarrow RecordBatches: identical
-    header, identical ``block_rows``-row block boundaries (cut across
-    incoming batch edges), identical deflate level — byte-identical
-    files, ~10-20x less encode CPU (numpy scatter instead of per-value
-    Python)."""
+    """Write pyarrow RecordBatches (columns named as ``schema``'s
+    fields) as an Avro object container file in ``block_rows``-row
+    blocks, cut across incoming batch edges. Returns the row count.
+    The bytes equal a value-at-a-time encoder's (same header, block
+    cuts and deflate level) at ~10-20x less encode CPU (numpy scatter
+    instead of per-value Python)."""
     import pyarrow as pa
 
-    field_specs = [
-        (f["name"], *_field_plan(f["type"])) for f in schema["fields"]
-    ]
+    field_specs = [_field_plan(f) for f in schema["fields"]]
     names = [s[0] for s in field_specs]
     sync = _sync_marker(os.path.basename(path))
     n_total = 0
@@ -731,6 +518,13 @@ def write_container_arrow(
         return pa.Table.from_batches(parts).combine_chunks().to_batches()[0]
 
     with open(path, "wb") as fh:
+
+        def _emit(blk) -> None:
+            nonlocal n_total
+            payload = _encode_block_arrow(blk, field_specs)
+            fh.write(_frame_block(payload, blk.num_rows, codec, sync))
+            n_total += blk.num_rows
+
         fh.write(_container_header(schema, codec, sync))
         for batch in batches:
             if batch.schema.names != names:
@@ -738,120 +532,36 @@ def write_container_arrow(
             pending.append(batch)
             npend += batch.num_rows
             while npend >= block_rows:
-                blk = _take(block_rows)
-                fh.write(
-                    _frame_block(
-                        _encode_block_arrow(blk, field_specs),
-                        blk.num_rows,
-                        codec,
-                        sync,
-                    )
-                )
-                n_total += blk.num_rows
+                _emit(_take(block_rows))
         if npend:
-            blk = _take(npend)
-            fh.write(
-                _frame_block(
-                    _encode_block_arrow(blk, field_specs),
-                    blk.num_rows,
-                    codec,
-                    sync,
-                )
-            )
-            n_total += blk.num_rows
+            _emit(_take(npend))
     return n_total
 
 
 #: compiled per-schema block decoders, keyed by the field-spec signature
 _DECODER_CACHE: dict[str, object] = {}
 
-#: code template per (kind, nullable) — {i} = capture index. The loop
-#: body is exec-compiled once per schema so the hot path has no
-#: per-value dispatch, no function calls and no datetime construction
-#: (logical ints stay ints; Arrow assembly types them).
-_SNIPPETS = {
-    ("varint", False): """
-        a = buf[pos]; pos += 1
-        if a & 128:
-            a &= 127; s = 7
-            while True:
-                b_ = buf[pos]; pos += 1
-                a |= (b_ & 127) << s
-                if b_ < 128:
-                    break
-                s += 7
-        c{i}((a >> 1) ^ -(a & 1))
-""",
-    ("varint", True): """
-        if buf[pos]:
-            pos += 1
-            a = buf[pos]; pos += 1
-            if a & 128:
-                a &= 127; s = 7
-                while True:
-                    b_ = buf[pos]; pos += 1
-                    a |= (b_ & 127) << s
-                    if b_ < 128:
-                        break
-                    s += 7
-            c{i}((a >> 1) ^ -(a & 1))
-        else:
-            pos += 1
-            c{i}(None)
-""",
-    ("double", False): """
-        c{i}(pos); pos += 8
-""",
-    ("double", True): """
-        if buf[pos]:
-            pos += 1
-            c{i}(pos); pos += 8
-        else:
-            pos += 1
-            c{i}(-1)
-""",
-    ("string", False): """
-        a = buf[pos]; pos += 1
-        if a & 128:
-            a &= 127; s = 7
-            while True:
-                b_ = buf[pos]; pos += 1
-                a |= (b_ & 127) << s
-                if b_ < 128:
-                    break
-                s += 7
-        n_ = (a >> 1) ^ -(a & 1)
-        c{i}(pos); c{j}(n_); pos += n_
-""",
-    ("string", True): """
-        if buf[pos]:
-            pos += 1
-            a = buf[pos]; pos += 1
-            if a & 128:
-                a &= 127; s = 7
-                while True:
-                    b_ = buf[pos]; pos += 1
-                    a |= (b_ & 127) << s
-                    if b_ < 128:
-                        break
-                    s += 7
-            n_ = (a >> 1) ^ -(a & 1)
-            c{i}(pos); c{j}(n_); pos += n_
-        else:
-            pos += 1
-            c{i}(-1); c{j}(0)
-""",
-    ("boolean", False): """
-        c{i}(buf[pos] != 0); pos += 1
-""",
-    ("boolean", True): """
-        if buf[pos]:
-            pos += 1
-            c{i}(buf[pos] != 0); pos += 1
-        else:
-            pos += 1
-            c{i}(None)
-""",
+#: decode of one present value per kind, appending raw captures —
+#: {i}/{j} = capture indices. The loop body is exec-compiled once per
+#: schema so the hot path has no per-value dispatch, no function calls
+#: and no datetime construction (logical ints stay ints; Arrow assembly
+#: types them).
+_VALUE_SRC = {
+    "varint": VARINT_READ + "c{i}((a >> 1) ^ -(a & 1))\n",
+    "double": "c{i}(pos); pos += 8\n",
+    "string": VARINT_READ
+    + "n_ = (a >> 1) ^ -(a & 1)\nc{i}(pos); c{j}(n_); pos += n_\n",
+    "boolean": "c{i}(buf[pos] != 0); pos += 1\n",
+}
+_VALUE_SRC["bytes"] = _VALUE_SRC["string"]
+
+#: captures a null value leaves, per kind
+_NULL_SRC = {
+    "varint": "c{i}(None)\n",
+    "double": "c{i}(-1)\n",
+    "string": "c{i}(-1); c{j}(0)\n",
+    "bytes": "c{i}(-1); c{j}(0)\n",
+    "boolean": "c{i}(None)\n",
 }
 
 
@@ -864,25 +574,25 @@ def _block_decoder(field_specs):
     fn = _DECODER_CACHE.get(key)
     if fn is not None:
         return fn
-    binds = []
     body = []
     i = 0
-    for _name, nullable, kind in field_specs:
-        snip_kind = "string" if kind == "bytes" else kind
-        snip = _SNIPPETS[(snip_kind, nullable)]
-        if snip_kind == "string":
-            binds.append(f"    c{i} = caps[{i}].append")
-            binds.append(f"    c{i + 1} = caps[{i + 1}].append")
-            body.append(snip.format(i=i, j=i + 1))
-            i += 2
-        else:
-            binds.append(f"    c{i} = caps[{i}].append")
-            body.append(snip.format(i=i))
-            i += 1
+    for _name, null_branch, kind in field_specs:
+        src = _VALUE_SRC[kind]
+        if null_branch is not None:
+            # the branch index is one byte, zigzag(0) or zigzag(1); the
+            # null branch's byte marks a null in either union order
+            src = (
+                f"if buf[pos] != {2 * null_branch}:\n    pos += 1\n"
+                + textwrap.indent(src, "    ")
+                + "else:\n    pos += 1\n"
+                + textwrap.indent(_NULL_SRC[kind], "    ")
+            )
+        body.append(textwrap.indent(src.format(i=i, j=i + 1), " " * 8))
+        i += 2 if kind in ("string", "bytes") else 1
     src = (
         "def _decode(buf, n_rows, caps):\n"
-        + "\n".join(binds)
-        + "\n    pos = 0\n    for _ in range(n_rows):\n"
+        + "".join(f"    c{k} = caps[{k}].append\n" for k in range(i))
+        + "    pos = 0\n    for _ in range(n_rows):\n"
         + "".join(body)
         + "    return pos\n"
     )
@@ -901,7 +611,7 @@ def _assemble_block(caps, field_specs, pa_schema, payload, n_rows):
     buf_np = np.frombuffer(payload, np.uint8)
     arrays = []
     i = 0
-    for (_name, _nullable, kind), f in zip(field_specs, pa_schema):
+    for (_name, _null_branch, kind), f in zip(field_specs, pa_schema):
         if kind in ("varint", "boolean"):
             vals = caps[i]
             i += 1
@@ -961,21 +671,16 @@ def _assemble_block(caps, field_specs, pa_schema, payload, n_rows):
 
 
 def read_container_arrow(path: str, pa_schema=None):
-    """Columnar twin of ``read_container``: yields one pyarrow
-    RecordBatch per container block via the codegen decoder. Values are
-    identical to the row path (same varint/IEEE/UTF-8 decode, same null
-    semantics); only the materialization is columnar."""
-    schema, codec, sync, pos = read_header(path)
-    if pa_schema is None:
-        pa_schema = pa_schema_from_avro(schema)
-        if pa_schema is None:
-            raise ValueError(f"schema of {path} is not Arrow-safe")
-    field_specs = tuple(
-        (f["name"], *_field_plan(f["type"])) for f in schema["fields"]
-    )
-    decode, n_caps = _block_decoder(field_specs)
+    """Decode an Avro object container file with the WRITER's schema
+    embedded in its header (self-describing read), yielding one pyarrow
+    RecordBatch per container block via the codegen decoder."""
     with open(path, "rb") as fh:
         buf = fh.read()
+    schema, codec, sync, pos = _parse_header(buf, path)
+    if pa_schema is None:
+        pa_schema = pa_schema_from_avro(schema)
+    field_specs = tuple(_field_plan(f) for f in schema["fields"])
+    decode, n_caps = _block_decoder(field_specs)
     while pos < len(buf):
         n_rows, pos = _read_long(buf, pos)
         n_bytes, pos = _read_long(buf, pos)
@@ -1013,7 +718,6 @@ def make_avro_source():
         DataSource,
         DataSourceArrowWriter,
         DataSourceReader,
-        DataSourceWriter,
         InputPartition,
         WriterCommitMessage,
     )
@@ -1026,11 +730,14 @@ def make_avro_source():
         def __init__(self, tmp_name: str):
             self.tmp_name = tmp_name
 
-    class AvroPyWriter(DataSourceWriter):
+    class AvroPyWriter(DataSourceArrowWriter):
         """Two-phase commit: tasks stage `.tmp-*` container files (task
         attempt id in the name so speculative retries never collide);
         the driver-side commit promotes them to part-NNNNN.avro and
-        writes _SUCCESS, so readers never observe a torn write."""
+        writes _SUCCESS, so readers never observe a torn write. Tasks
+        receive pyarrow RecordBatches (Arrow transport, round-15) and
+        encode them column-wise through the numpy block encoder
+        (round-16, guide §4.2)."""
 
         def __init__(self, options, schema, overwrite: bool):
             self.dir = options["path"]
@@ -1047,20 +754,14 @@ def make_avro_source():
                 f".tmp-{ctx.partitionId()}-{ctx.taskAttemptId()}-"
                 f"{uuid.uuid4().hex[:8]}"
             )
-            names = [f["name"] for f in self.avro_schema["fields"]]
-            write_container(
+            write_container_arrow(
                 os.path.join(self.dir, tmp),
                 self.avro_schema,
-                (tuple(row[n] for n in names) for row in iterator),
+                iterator,
                 codec=self.codec,
             )
             return _Staged(tmp)
 
-        # commit/abort live on the BASE writer (ADVICE r15: they were
-        # accidentally moved onto the Arrow subclass, leaving the row
-        # path — still selected for Arrow-unsafe schemas — with the
-        # inherited no-op commit, so staged .tmp-* files were never
-        # promoted). The Arrow subclass inherits them.
         def commit(self, messages) -> None:
             for i, m in enumerate(messages):
                 os.replace(
@@ -1078,29 +779,6 @@ def make_avro_source():
                     except OSError:
                         pass
 
-    class AvroPyArrowWriter(DataSourceArrowWriter, AvroPyWriter):
-        """Arrow-transport variant (round-15, guide §4): same staging /
-        commit / abort protocol, but tasks receive pyarrow RecordBatches
-        and encode them COLUMN-WISE through the numpy block encoder
-        (round-16, guide §4.2: the per-row Python encode loop was the
-        hot half of every avro_py write). Byte output is identical to
-        the row path. Chosen by ``writer()`` whenever every field is
-        Arrow-transport-safe."""
-
-        def write(self, iterator):
-            ctx = TaskContext.get()
-            tmp = (
-                f".tmp-{ctx.partitionId()}-{ctx.taskAttemptId()}-"
-                f"{uuid.uuid4().hex[:8]}"
-            )
-            write_container_arrow(
-                os.path.join(self.dir, tmp),
-                self.avro_schema,
-                iterator,
-                codec=self.codec,
-            )
-            return _Staged(tmp)
-
     class AvroPyReader(DataSourceReader):
         def __init__(self, options):
             self.dir = options["path"]
@@ -1117,38 +795,16 @@ def make_avro_source():
             ]
 
         def read(self, partition):
-            writer_schema, _, _, _ = read_header(partition.path)
-            eff = self.reader_schema or writer_schema
-            # Columnar decode when BOTH schemas are Arrow-safe
-            # (round-16, guide §4.2): the codegen block decoder yields
-            # RecordBatches without per-value dispatch. Values are
-            # identical — the row path below stays the reference and
-            # the fallback for tz-aware timestamps / exotic unions.
-            pa_eff = pa_schema_from_avro(eff)
-            if pa_eff is not None and pa_schema_from_avro(writer_schema) is not None:
-                if self.reader_schema is not None:
-                    yield from read_container_arrow_resolved(
-                        partition.path, self.reader_schema, pa_eff
-                    )
-                else:
-                    yield from read_container_arrow(partition.path, pa_eff)
-                return
-            if self.reader_schema is not None:
-                # spec Schema Resolution: consumer-side evolution —
-                # resolve each file's WRITER schema against the reader
-                # schema executor-side (defaults, drops, promotions)
-                rows = read_container_resolved(
-                    partition.path, self.reader_schema
-                )
-            else:
-                rows = read_container(partition.path)
-            # Arrow transport when every field is safe (round-15, guide
-            # §4): yield RecordBatches instead of per-row pickled tuples;
-            # values are identical — only the boundary format changes.
-            if pa_eff is None:
-                yield from rows
-            else:
-                yield from rows_to_arrow_batches(rows, pa_eff)
+            if self.reader_schema is None:
+                return read_container_arrow(partition.path)
+            # spec Schema Resolution: consumer-side evolution — resolve
+            # each file's WRITER schema against the reader schema
+            # executor-side (defaults, drops, promotions)
+            return read_container_arrow_resolved(
+                partition.path,
+                self.reader_schema,
+                pa_schema_from_avro(self.reader_schema),
+            )
 
     class AvroPySource(DataSource):
         @classmethod
@@ -1173,16 +829,7 @@ def make_avro_source():
             return AvroPyReader(self.options)
 
         def writer(self, schema, overwrite: bool) -> AvroPyWriter:
-            # Arrow transport when safe; row path otherwise (tz-aware
-            # timestamp values differ between the two transports, so
-            # those schemas keep the original path).
-            cls = (
-                AvroPyArrowWriter
-                if pa_schema_from_avro(avro_schema_from_spark(schema))
-                is not None
-                else AvroPyWriter
-            )
-            return cls(self.options, schema, overwrite)
+            return AvroPyWriter(self.options, schema, overwrite)
 
     return AvroPySource
 
@@ -1200,7 +847,8 @@ def make_avro_stream_source():
     ``readBetweenOffsets`` replays any committed file range
     byte-identically (files are immutable, listing is sorted — a pure
     function of the offset pair). Decoding runs through the same
-    spec-implemented codec as the batch source.
+    columnar codec as the batch source, and both methods hand Spark
+    RecordBatches.
     """
     from pyspark.sql.datasource import (
         DataSource,
@@ -1224,15 +872,17 @@ def make_avro_stream_source():
             files = self._files()
             lo = int(start["idx"])
             hi = min(lo + self.max_files, len(files))
-            rows: list[tuple] = []
-            for f in files[lo:hi]:
-                rows.extend(read_container(os.path.join(self.dir, f)))
-            return iter(rows), {"idx": hi}
+            batches = [
+                b
+                for f in files[lo:hi]
+                for b in read_container_arrow(os.path.join(self.dir, f))
+            ]
+            return iter(batches), {"idx": hi}
 
         def readBetweenOffsets(self, start: dict, end: dict):
             files = self._files()
             for f in files[int(start["idx"]) : int(end["idx"])]:
-                yield from read_container(os.path.join(self.dir, f))
+                yield from read_container_arrow(os.path.join(self.dir, f))
 
     class AvroStreamSource(DataSource):
         @classmethod
@@ -1273,19 +923,10 @@ def _nonnull_base(typ) -> str:
     return _base_type(typ)
 
 
-def _resolve_value(reader_t, v):
-    """Promote a decoded writer value to the reader's type."""
-    if v is None:
-        return None
-    if _nonnull_base(reader_t) == "double" and isinstance(v, int):
-        return float(v)
-    return v
-
-
 def _resolution_plan(writer_schema: dict, reader_schema: dict) -> list:
     """Per reader field: ("copy", writer_idx, reader_t) | ("default",
-    value) — shared by the row and columnar resolved readers so the
-    spec's resolution/promotion checks cannot drift apart."""
+    value) — shared with the reference reader in tests/avro_reference.py
+    so the spec's resolution/promotion checks cannot drift apart."""
     writer_fields = writer_schema["fields"]
     by_name = {f["name"]: i for i, f in enumerate(writer_fields)}
     plan = []
@@ -1313,11 +954,15 @@ def _resolution_plan(writer_schema: dict, reader_schema: dict) -> list:
 
 
 def read_container_arrow_resolved(path: str, reader_schema: dict, pa_reader):
-    """Columnar twin of ``read_container_resolved``: decode the writer's
-    blocks via the codegen decoder, then apply the resolution plan
-    column-wise (defaults as literal columns, promotions as Arrow
-    casts — int->long/double, long->double, float->double, the same
-    value mapping ``_resolve_value`` applies row-wise)."""
+    """Decode a container file under a READER schema (spec: Schema
+    Resolution): fields match by NAME; writer-only fields are decoded
+    and dropped; reader-only fields take their declared ``default``;
+    int->long/double, long->double, float->double promotions apply.
+    This is how a consumer upgrades its schema without rewriting the
+    landed files — the evolution half of the Avro contract. The
+    writer's blocks decode via the codegen decoder; the plan then
+    applies column-wise (defaults as literal columns, promotions as
+    Arrow casts). ``pa_reader`` is ``pa_schema_from_avro(reader_schema)``."""
     import pyarrow as pa
 
     writer_schema, _, _, _ = read_header(path)
@@ -1335,25 +980,3 @@ def read_container_arrow_resolved(path: str, reader_schema: dict, pa_reader):
                     col = col.cast(f.type)
                 arrays.append(col)
         yield pa.RecordBatch.from_arrays(arrays, schema=pa_reader)
-
-
-def read_container_resolved(path: str, reader_schema: dict) -> Iterator[tuple]:
-    """Decode a container file under a READER schema (spec: Schema
-    Resolution): fields match by NAME; writer-only fields are decoded
-    and dropped; reader-only fields take their declared ``default``;
-    int->long/double, long->double, float->double promotions apply.
-    This is how a consumer upgrades its schema without rewriting the
-    landed files — the evolution half of the Avro contract.
-    """
-    writer_schema, _, _, _ = read_header(path)
-    plan = _resolution_plan(writer_schema, reader_schema)
-
-    for row in read_container(path):
-        out = []
-        for step in plan:
-            if step[0] == "default":
-                out.append(step[1])
-            else:
-                _, wi, rt = step
-                out.append(_resolve_value(rt, row[wi]))
-        yield tuple(out)

@@ -42,6 +42,15 @@ from __future__ import annotations
 import math as _math
 import struct
 
+from .varint import (
+    VARINT_READ,
+    np_varint_lens,
+    np_write_varints,
+    np_zigzag,
+    read_varint,
+    write_varint,
+)
+
 VARINT, I64, LEN, I32 = 0, 1, 2, 5
 
 _WIRE = {
@@ -65,29 +74,6 @@ _DEFAULTS = {
 }
 
 
-def _write_varint(out: bytearray, u: int) -> None:
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return
-
-
-def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
-    acc = 0
-    shift = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        acc |= (b & 0x7F) << shift
-        if not (b & 0x80):
-            return acc, pos
-        shift += 7
-
-
 def _kind_base(kind) -> str:
     return kind[0] if isinstance(kind, tuple) else kind
 
@@ -96,21 +82,21 @@ def _encode_scalar(kind: str, v, out: bytearray) -> None:
     """Tag-less payload encoding for one scalar value."""
     if kind == "int64":
         # proto wire: negative int64 is 10-byte two's-complement varint
-        _write_varint(out, v & 0xFFFFFFFFFFFFFFFF)
+        write_varint(out, v & 0xFFFFFFFFFFFFFFFF)
     elif kind == "sint64":
-        _write_varint(out, (v << 1) ^ (v >> 63))
+        write_varint(out, (v << 1) ^ (v >> 63))
     elif kind == "bool":
-        _write_varint(out, 1 if v else 0)
+        write_varint(out, 1 if v else 0)
     elif kind == "double":
         out.extend(struct.pack("<d", v))
     elif kind == "float":
         out.extend(struct.pack("<f", v))
     elif kind == "string":
         raw = v.encode("utf-8")
-        _write_varint(out, len(raw))
+        write_varint(out, len(raw))
         out.extend(raw)
     elif kind == "bytes":
-        _write_varint(out, len(v))
+        write_varint(out, len(v))
         out.extend(v)
     else:  # pragma: no cover - guarded by schema construction
         raise ValueError(f"unsupported scalar kind {kind!r}")
@@ -118,23 +104,23 @@ def _encode_scalar(kind: str, v, out: bytearray) -> None:
 
 def _decode_scalar(kind: str, buf: bytes, pos: int):
     if kind == "int64":
-        u, pos = _read_varint(buf, pos)
+        u, pos = read_varint(buf, pos)
         return u - (1 << 64) if u >= 1 << 63 else u, pos
     if kind == "sint64":
-        u, pos = _read_varint(buf, pos)
+        u, pos = read_varint(buf, pos)
         return (u >> 1) ^ -(u & 1), pos
     if kind == "bool":
-        u, pos = _read_varint(buf, pos)
+        u, pos = read_varint(buf, pos)
         return u != 0, pos
     if kind == "double":
         return struct.unpack_from("<d", buf, pos)[0], pos + 8
     if kind == "float":
         return struct.unpack_from("<f", buf, pos)[0], pos + 4
     if kind == "string":
-        ln, pos = _read_varint(buf, pos)
+        ln, pos = read_varint(buf, pos)
         return buf[pos : pos + ln].decode("utf-8"), pos + ln
     if kind == "bytes":
-        ln, pos = _read_varint(buf, pos)
+        ln, pos = read_varint(buf, pos)
         return bytes(buf[pos : pos + ln]), pos + ln
     raise ValueError(f"unsupported scalar kind {kind!r}")  # pragma: no cover
 
@@ -174,8 +160,8 @@ def encode_message(schema: dict, values: dict) -> bytes:
             if v is None:
                 continue
             payload = encode_message(kind[1], v)
-            _write_varint(out, (num << 3) | LEN)
-            _write_varint(out, len(payload))
+            write_varint(out, (num << 3) | LEN)
+            write_varint(out, len(payload))
             out.extend(payload)
         elif base == "repeated":
             if not v:
@@ -186,23 +172,23 @@ def encode_message(schema: dict, values: dict) -> bytes:
                 packed = bytearray()
                 for elem in v:
                     _encode_scalar(ibase, elem, packed)
-                _write_varint(out, (num << 3) | LEN)
-                _write_varint(out, len(packed))
+                write_varint(out, (num << 3) | LEN)
+                write_varint(out, len(packed))
                 out.extend(packed)
             elif ibase == "message":
                 for elem in v:
                     payload = encode_message(inner[1], elem)
-                    _write_varint(out, (num << 3) | LEN)
-                    _write_varint(out, len(payload))
+                    write_varint(out, (num << 3) | LEN)
+                    write_varint(out, len(payload))
                     out.extend(payload)
             else:  # repeated string/bytes: one LEN field per element
                 for elem in v:
-                    _write_varint(out, (num << 3) | _WIRE[ibase])
+                    write_varint(out, (num << 3) | _WIRE[ibase])
                     _encode_scalar(ibase, elem, out)
         else:
             if v is None or _is_default(base, v):
                 continue
-            _write_varint(out, (num << 3) | _WIRE[base])
+            write_varint(out, (num << 3) | _WIRE[base])
             _encode_scalar(base, v, out)
     return bytes(out)
 
@@ -218,12 +204,12 @@ def _default_for(kind):
 
 def _skip_field(wire: int, buf: bytes, pos: int) -> int:
     if wire == VARINT:
-        _, pos = _read_varint(buf, pos)
+        _, pos = read_varint(buf, pos)
         return pos
     if wire == I64:
         return pos + 8
     if wire == LEN:
-        ln, pos = _read_varint(buf, pos)
+        ln, pos = read_varint(buf, pos)
         return pos + ln
     if wire == I32:
         return pos + 4
@@ -248,30 +234,6 @@ def _as_wanted(spec: dict) -> dict:
 # ---------------------------------------------------------------------------
 
 
-def _np_varint_lens(u):
-    """Per-value varint byte length (1..10) for a uint64 array."""
-    import numpy as np
-
-    lens = np.ones(u.shape, np.int64)
-    for k in range(1, 10):
-        lens += (u >= (np.uint64(1) << np.uint64(7 * k))).astype(np.int64)
-    return lens
-
-
-def _np_write_varints(buf, starts, u, lens) -> None:
-    """Scatter varints (values ``u`` uint64, byte lengths ``lens``) into
-    ``buf`` at ``starts`` — the vectorized twin of ``_write_varint``."""
-    import numpy as np
-
-    if not len(starts):
-        return
-    for k in range(int(lens.max())):
-        m = lens > k
-        grp = ((u[m] >> np.uint64(7 * k)) & np.uint64(0x7F)).astype(np.uint8)
-        cont = (lens[m] - 1 > k).astype(np.uint8) << 7
-        buf[starts[m] + k] = grp | cont
-
-
 def encode_flat_batch(schema: dict, cols: dict):
     """Vectorized proto3 encode of N FLAT scalar messages — byte-wise
     identical to calling ``encode_message`` per row (same field order,
@@ -290,7 +252,7 @@ def encode_flat_batch(schema: dict, cols: dict):
         num, kind = schema[name]
         base = _kind_base(kind)
         tag = bytearray()
-        _write_varint(tag, (num << 3) | _WIRE[base])
+        write_varint(tag, (num << 3) | _WIRE[base])
         tl = len(tag)
         col = cols[name]
         if base in ("int64", "sint64", "bool"):
@@ -301,14 +263,12 @@ def encode_flat_batch(schema: dict, cols: dict):
             elif base == "sint64":
                 v = v.astype(np.int64)
                 emit = v != 0
-                u = (v.astype(np.uint64) << np.uint64(1)) ^ (
-                    v >> np.int64(63)
-                ).astype(np.uint64)
+                u = np_zigzag(v)
             else:
                 v = v.astype(np.int64)
                 emit = v != 0
                 u = v.astype(np.uint64)  # two's-complement varint
-            vl = _np_varint_lens(u)
+            vl = np_varint_lens(u)
             per_field.append((base, bytes(tag), emit, u, vl))
             lens[j] = np.where(emit, tl + vl, 0)
         elif base in ("double", "float"):
@@ -326,7 +286,7 @@ def encode_flat_batch(schema: dict, cols: dict):
             emit = plen > 0
             blob = np.frombuffer(b"".join(enc), np.uint8)
             lu = plen.astype(np.uint64)
-            ll = _np_varint_lens(lu)
+            ll = np_varint_lens(lu)
             src0 = np.cumsum(plen) - plen
             per_field.append((base, bytes(tag), emit, lu, ll, plen, src0, blob))
             lens[j] = np.where(emit, tl + ll + plen, 0)
@@ -350,7 +310,7 @@ def encode_flat_batch(schema: dict, cols: dict):
         vst = st + len(tag)
         if base in ("int64", "sint64", "bool"):
             _, _, _, u, vl = spec
-            _np_write_varints(buf, vst, u[emit], vl[emit])
+            np_write_varints(buf, vst, u[emit], vl[emit])
         elif base in ("double", "float"):
             _, _, _, v, width = spec
             dv = v[emit]
@@ -361,7 +321,7 @@ def encode_flat_batch(schema: dict, cols: dict):
                 ).reshape(-1, width)
         else:
             _, _, _, lu, ll, plen, src0, blob = spec
-            _np_write_varints(buf, vst, lu[emit], ll[emit])
+            np_write_varints(buf, vst, lu[emit], ll[emit])
             pst = vst + ll[emit]
             plv = plen[emit]
             tot = int(plv.sum())
@@ -379,20 +339,6 @@ def encode_flat_batch(schema: dict, cols: dict):
 
 #: compiled flat-projection decoders, keyed by the wanted-spec signature
 _FLAT_DECODER_CACHE: dict[str, object] = {}
-
-#: zero-indent varint read into ``a`` (indented per use site)
-_VARINT_READ = """\
-a = buf[pos]; pos += 1
-if a & 128:
-    a &= 127; s = 7
-    while True:
-        b_ = buf[pos]; pos += 1
-        a |= (b_ & 127) << s
-        if b_ < 128:
-            break
-        s += 7
-"""
-
 
 def _flat_decoder(wanted: dict):
     """exec-compile a projection decoder for FLAT scalar messages:
@@ -431,7 +377,7 @@ def _flat_decoder(wanted: dict):
                 fix = f"v{i} = a != 0\n"
             branches.append(
                 ind(f"{kw} num == {num}:\n", 3)
-                + ind(_VARINT_READ + fix, 4)
+                + ind(VARINT_READ + fix, 4)
             )
             appends.append(f"c{i}(v{i})")
             cap_names.append((name, base, 1))
@@ -450,7 +396,7 @@ def _flat_decoder(wanted: dict):
             inits.append(f"o{i} = -1; l{i} = 0")
             branches.append(
                 ind(f"{kw} num == {num}:\n", 3)
-                + ind(_VARINT_READ + f"o{i} = pos; l{i} = a; pos += a\n", 4)
+                + ind(VARINT_READ + f"o{i} = pos; l{i} = a; pos += a\n", 4)
             )
             appends.append(f"c{i}(o{i})")
             appends.append(f"c{i + 1}(l{i})")
@@ -468,7 +414,7 @@ def _flat_decoder(wanted: dict):
             "elif wire == 2:\n",
             4,
         )
-        + ind(_VARINT_READ + "pos += a\n", 5)
+        + ind(VARINT_READ + "pos += a\n", 5)
         + ind(
             "elif wire == 1:\n"
             "    pos += 8\n"
@@ -486,7 +432,7 @@ def _flat_decoder(wanted: dict):
         + ind("pos = offsets[mi]; end = offsets[mi + 1]\n", 2)
         + ind("\n".join(inits) + "\n", 2)
         + ind("while pos < end:\n", 2)
-        + ind(_VARINT_READ + "num = a >> 3; wire = a & 7\n", 3)
+        + ind(VARINT_READ + "num = a >> 3; wire = a & 7\n", 3)
         + "".join(branches)
         + skip
         + ind("\n".join(appends) + "\n", 2)
@@ -631,17 +577,17 @@ def _encode_event_envelope_np(user_id: int, event_ids, values) -> bytes:
     val = np.asarray(values, np.float64)
     u_eid = eid.astype(np.uint64)
     emit_id = eid != 0
-    idl = _np_varint_lens(u_eid)
+    idl = np_varint_lens(u_eid)
     id_part = np.where(emit_id, 1 + idl, 0)
     emit_v = ~((val == 0.0) & ~np.signbit(val))
     v_part = np.where(emit_v, 9, 0)
     sub_len = id_part + v_part
-    sl = _np_varint_lens(sub_len.astype(np.uint64))
+    sl = np_varint_lens(sub_len.astype(np.uint64))
     ev_len = 1 + sl + sub_len
     head = bytearray()
     if user_id:
-        _write_varint(head, (1 << 3) | VARINT)
-        _write_varint(head, user_id & 0xFFFFFFFFFFFFFFFF)
+        write_varint(head, (1 << 3) | VARINT)
+        write_varint(head, user_id & 0xFFFFFFFFFFFFFFFF)
     h = len(head)
     if not len(ev_len):
         return bytes(head)
@@ -651,11 +597,11 @@ def _encode_event_envelope_np(user_id: int, event_ids, values) -> bytes:
     if h:
         buf[:h] = np.frombuffer(bytes(head), np.uint8)
     buf[starts] = (2 << 3) | LEN  # 0x12
-    _np_write_varints(buf, starts + 1, sub_len.astype(np.uint64), sl)
+    np_write_varints(buf, starts + 1, sub_len.astype(np.uint64), sl)
     p = starts + 1 + sl
     pi = p[emit_id]
     buf[pi] = (1 << 3) | VARINT  # 0x08
-    _np_write_varints(buf, pi + 1, u_eid[emit_id], idl[emit_id])
+    np_write_varints(buf, pi + 1, u_eid[emit_id], idl[emit_id])
     pv = (p + id_part)[emit_v]
     buf[pv] = (2 << 3) | I64  # 0x11
     dv = val[emit_v]
@@ -774,7 +720,7 @@ def decode_message(buf: bytes, wanted: dict) -> dict:
     pos = 0
     n = len(buf)
     while pos < n:
-        tag, pos = _read_varint(buf, pos)
+        tag, pos = read_varint(buf, pos)
         num, wire = tag >> 3, tag & 0x7
         spec = wanted.get(num)
         if spec is None:
@@ -783,20 +729,20 @@ def decode_message(buf: bytes, wanted: dict) -> dict:
         name, kind = spec
         base = _kind_base(kind)
         if base == "message":
-            ln, pos = _read_varint(buf, pos)
+            ln, pos = read_varint(buf, pos)
             out[name] = decode_message(buf[pos : pos + ln], kind[1])
             pos += ln
         elif base == "repeated":
             inner = kind[1]
             ibase = _kind_base(inner)
             if ibase == "message":
-                ln, pos = _read_varint(buf, pos)
+                ln, pos = read_varint(buf, pos)
                 out[name].append(
                     decode_message(buf[pos : pos + ln], inner[1])
                 )
                 pos += ln
             elif ibase in _PACKABLE and wire == LEN:
-                ln, pos = _read_varint(buf, pos)
+                ln, pos = read_varint(buf, pos)
                 end = pos + ln
                 while pos < end:
                     v, pos = _decode_scalar(ibase, buf, pos)

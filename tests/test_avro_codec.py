@@ -1,22 +1,29 @@
 """Unit tests for the pure-Python Avro wire-format codec
-(sources/avro_python.py) — spec vectors, container round-trips, and the
-header/self-description contract. Pure Python: no SparkSession needed
-(the Spark integration is covered by the q_sink_avro_python /
-q_scan_avro_python oracle mirror in test_queries.py)."""
+(sources/avro_python.py) — spec vectors, container round-trips, the
+header/self-description contract, and byte/value identity of the
+columnar codec with the row-at-a-time reference in avro_reference.py.
+Mostly pure Python (the Spark integration is covered by the
+q_sink_avro_python / q_scan_avro_python oracle mirror in
+test_queries.py); the data-source tests at the end run a real Spark
+write or read."""
 
 import datetime
 import os
 
 import pytest
 
+from avro_reference import read_container, read_container_resolved, write_container
+
 from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.avro_python import (
     AVRO_MAGIC,
     _read_long,
     _write_long,
-    read_container,
+    pa_schema_from_avro,
+    read_container_arrow,
+    read_container_arrow_resolved,
     read_header,
     spark_ddl_from_avro,
-    write_container,
+    write_container_arrow,
 )
 
 SCHEMA = {
@@ -187,10 +194,6 @@ def test_property_nan_double_roundtrip(tmp_path):
 def test_schema_resolution_defaults_drops_promotions(tmp_path):
     """Spec Schema Resolution: reader drops a writer field, adds one
     with a default, and promotes long->double — against the same file."""
-    from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.avro_python import (
-        read_container_resolved,
-    )
-
     writer = {
         "type": "record",
         "name": "v1",
@@ -218,10 +221,6 @@ def test_schema_resolution_defaults_drops_promotions(tmp_path):
 
 
 def test_schema_resolution_missing_default_errors(tmp_path):
-    from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.avro_python import (
-        read_container_resolved,
-    )
-
     writer = {"type": "record", "name": "v1",
               "fields": [{"name": "id", "type": "long"}]}
     p = str(tmp_path / "nd.avro")
@@ -231,13 +230,11 @@ def test_schema_resolution_missing_default_errors(tmp_path):
                          {"name": "extra", "type": "string"}]}
     with pytest.raises(ValueError, match="no default"):
         list(read_container_resolved(p, reader))
+    with pytest.raises(ValueError, match="no default"):
+        list(read_container_arrow_resolved(p, reader, pa_schema_from_avro(reader)))
 
 
 def test_schema_resolution_illegal_promotion_errors(tmp_path):
-    from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.avro_python import (
-        read_container_resolved,
-    )
-
     writer = {"type": "record", "name": "v1",
               "fields": [{"name": "x", "type": "string"}]}
     p = str(tmp_path / "ip.avro")
@@ -246,19 +243,17 @@ def test_schema_resolution_illegal_promotion_errors(tmp_path):
               "fields": [{"name": "x", "type": "long"}]}
     with pytest.raises(ValueError, match="promote"):
         list(read_container_resolved(p, reader))
+    with pytest.raises(ValueError, match="promote"):
+        list(read_container_arrow_resolved(p, reader, pa_schema_from_avro(reader)))
 
 
 # ---------------------------------------------------------------------------
-# round-16 vectorized block codec: byte-identity with the row path
+# columnar codec: byte/value identity with the row-at-a-time reference
 # ---------------------------------------------------------------------------
 
 
 def _arrow_batch(rows):
     import pyarrow as pa
-
-    from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.avro_python import (
-        pa_schema_from_avro,
-    )
 
     pa_schema = pa_schema_from_avro(SCHEMA)
     cols = list(zip(*rows)) if rows else [[] for _ in pa_schema]
@@ -273,10 +268,6 @@ def test_write_container_arrow_byte_identical(tmp_path, codec):
     """The numpy block encoder must produce EXACTLY the bytes of the
     row-at-a-time reference — same header, same 4096-row block cuts
     (across incoming batch edges), same deflate frames."""
-    from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.avro_python import (
-        write_container_arrow,
-    )
-
     rows = _rows(10_000)
     a = tmp_path / "a"
     b = tmp_path / "b"
@@ -298,10 +289,6 @@ def test_read_container_arrow_matches_row_reader(tmp_path):
     (nulls, dates, naive timestamps, negative longs included)."""
     import pyarrow as pa
 
-    from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.avro_python import (
-        read_container_arrow,
-    )
-
     rows = _rows(5000) + [(-(2**45), None, -0.0, False,
                            datetime.date(1969, 12, 31),
                            datetime.datetime(1969, 12, 31, 23, 59, 59))]
@@ -317,14 +304,8 @@ def test_read_container_arrow_matches_row_reader(tmp_path):
 
 def test_read_container_arrow_resolved_matches_row_resolved(tmp_path):
     """Columnar schema resolution (drops / defaults / promotions) must
-    equal the row-path resolved reader value-for-value."""
+    equal the reference resolved reader value-for-value."""
     import pyarrow as pa
-
-    from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.avro_python import (
-        pa_schema_from_avro,
-        read_container_arrow_resolved,
-        read_container_resolved,
-    )
 
     rows = _rows(3000)
     path = str(tmp_path / "f.avro")
@@ -353,10 +334,10 @@ def test_read_container_arrow_resolved_matches_row_resolved(tmp_path):
 
 
 def test_row_path_writer_commits(tmp_path):
-    """ADVICE r15 (high): the plain row-path AvroPyWriter — still
-    selected for Arrow-unsafe schemas (tz-aware TimestampType) — must
-    promote its staged files and write _SUCCESS. Exercised through a
-    real Spark write so the two-phase commit protocol runs."""
+    """ADVICE r15 (high): the avro_py writer must promote its staged
+    files and write _SUCCESS, here for a tz-aware TimestampType schema.
+    Exercised through a real Spark write so the two-phase commit
+    protocol runs."""
     import datetime
 
     import pytest
@@ -380,7 +361,7 @@ def test_row_path_writer_commits(tmp_path):
     df = spark.createDataFrame(
         [(1, datetime.datetime(2001, 2, 3, 4, 5, 6)),
          (2, datetime.datetime(2002, 3, 4, 5, 6, 7))],
-        "k bigint, ts timestamp",  # tz-aware -> Arrow-unsafe -> row path
+        "k bigint, ts timestamp",  # tz-aware -> timestamp-micros
     )
     df.repartition(1).write.format("avro_py").option("path", out).mode(
         "overwrite"
@@ -388,7 +369,7 @@ def test_row_path_writer_commits(tmp_path):
     import os
 
     assert os.path.exists(os.path.join(out, "_SUCCESS")), (
-        "row-path writer did not commit"
+        "avro_py writer did not commit"
     )
     back = sorted(
         (r.k, r.ts)
@@ -398,3 +379,188 @@ def test_row_path_writer_commits(tmp_path):
         (1, datetime.datetime(2001, 2, 3, 4, 5, 6)),
         (2, datetime.datetime(2002, 3, 4, 5, 6, 7)),
     ]
+
+
+def _pylist_rows(batches):
+    import pyarrow as pa
+
+    tbl = pa.Table.from_batches(list(batches))
+    return list(zip(*[c.to_pylist() for c in tbl.columns]))
+
+
+_UNION_VALUES = {
+    "long": lambda i: i * 7919 - 2**40,
+    "string": lambda i: f"v{i}" * (i % 3),
+    "double": lambda i: i / 3 - 100.0,
+    "boolean": lambda i: i % 4 == 0,
+}
+
+
+def _union_case(typ, null_first, n=500):
+    """A record of a non-null key and one optional field of ``typ``,
+    the union written null-first or null-second, with nulls spread
+    over the rows."""
+    union = ["null", typ] if null_first else [typ, "null"]
+    schema = {
+        "type": "record",
+        "name": "u",
+        "fields": [
+            {"name": "k", "type": "long"},
+            {"name": "v", "type": union},
+        ],
+    }
+    rows = [
+        (i, None if i % 3 == 1 else _UNION_VALUES[typ](i)) for i in range(n)
+    ]
+    return schema, rows
+
+
+@pytest.mark.parametrize("null_first", [True, False], ids=["null_T", "T_null"])
+@pytest.mark.parametrize("typ", sorted(_UNION_VALUES))
+def test_union_order_reference_to_columnar(tmp_path, typ, null_first):
+    """ADVICE r16: a [T, "null"] union was decoded as if null came
+    first. Files from the reference writer must read back value-exact
+    through the columnar reader in either union order."""
+    schema, rows = _union_case(typ, null_first)
+    path = str(tmp_path / "ref.avro")
+    write_container(path, schema, rows, block_rows=128)
+    assert _pylist_rows(read_container_arrow(path)) == rows
+
+
+@pytest.mark.parametrize("null_first", [True, False], ids=["null_T", "T_null"])
+@pytest.mark.parametrize("typ", sorted(_UNION_VALUES))
+def test_union_order_columnar_to_reference(tmp_path, typ, null_first):
+    """The columnar writer must write the actual branch index: its file
+    is byte-identical to the reference writer's and reads back through
+    the reference reader value-exact."""
+    import pyarrow as pa
+
+    schema, rows = _union_case(typ, null_first)
+    pa_schema = pa_schema_from_avro(schema)
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(zip(*rows), pa_schema)],
+        schema=pa_schema,
+    )
+    # same file name -> same name-seeded sync marker
+    (tmp_path / "ref").mkdir()
+    (tmp_path / "col").mkdir()
+    ref, col = tmp_path / "ref" / "u.avro", tmp_path / "col" / "u.avro"
+    write_container(str(ref), schema, rows, block_rows=128)
+    write_container_arrow(str(col), schema, [batch], block_rows=128)
+    assert col.read_bytes() == ref.read_bytes()
+    assert list(read_container(str(col))) == rows
+
+
+def test_multi_branch_union_refused(tmp_path):
+    """A union with two non-null branches has no single Arrow type; both
+    codec directions refuse it with an error naming the field."""
+    import pyarrow as pa
+
+    schema = {
+        "type": "record",
+        "name": "m",
+        "fields": [{"name": "u", "type": ["null", "long", "string"]}],
+    }
+    path = str(tmp_path / "m.avro")
+    write_container(path, schema, [(1,), (None,)])
+    with pytest.raises(ValueError, match="'u'"):
+        list(read_container_arrow(path))
+    batch = pa.RecordBatch.from_arrays([pa.array([1, None])], names=["u"])
+    with pytest.raises(ValueError, match="'u'"):
+        write_container_arrow(str(tmp_path / "w.avro"), schema, [batch])
+    with pytest.raises(ValueError, match="'u'"):
+        spark_ddl_from_avro(schema)
+
+
+def test_timestamp_micros_reads_as_utc_instant(tmp_path):
+    """timestamp-micros carries UTC micros; the columnar reader types it
+    as an instant in UTC, never a zone-less wall clock."""
+    schema = {
+        "type": "record",
+        "name": "t",
+        "fields": [
+            {"name": "ts", "type": ["null", {"type": "long",
+                                             "logicalType": "timestamp-micros"}]}
+        ],
+    }
+    rows = [(datetime.datetime(2001, 2, 3, 4, 5, 6, 789),), (None,)]
+    path = str(tmp_path / "ts.avro")
+    write_container(path, schema, rows)
+    utc = datetime.timezone.utc
+    assert _pylist_rows(read_container_arrow(path)) == [
+        (rows[0][0].replace(tzinfo=utc),),
+        (None,),
+    ]
+
+
+def test_spark_reads_null_second_union(spark, tmp_path):
+    """spark.read.format("avro_py") over a reference-written file whose
+    unions are all [T, "null"]."""
+    from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.avro_python import (
+        make_avro_source,
+    )
+
+    types = sorted(_UNION_VALUES)
+    schema = {
+        "type": "record",
+        "name": "n2",
+        "fields": [{"name": t, "type": [t, "null"]} for t in types],
+    }
+    rows = [
+        tuple(None if (i + j) % 3 == 0 else _UNION_VALUES[t](i)
+              for j, t in enumerate(types))
+        for i in range(200)
+    ]
+    out = tmp_path / "null_second"
+    out.mkdir()
+    write_container(str(out / "part-00000.avro"), schema, rows, block_rows=64)
+    (out / "_SUCCESS").write_text("ok")
+    spark.dataSource.register(make_avro_source())
+    got = spark.read.format("avro_py").option("path", str(out)).load()
+    assert got.columns == types
+    assert sorted(map(tuple, got.collect()), key=repr) == sorted(rows, key=repr)
+
+
+def test_timestamp_writer_any_session_timezone(spark, tmp_path):
+    """Under a non-UTC session timezone the writer still stores the UTC
+    instant (spec timestamp-micros): the reference reader decodes the
+    same micros Spark holds, and avro_py reads the instants back."""
+    from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.avro_python import (
+        make_avro_source,
+    )
+
+    utc = datetime.timezone.utc
+    instants = [
+        datetime.datetime(2001, 2, 3, 4, 5, 6, tzinfo=utc),
+        datetime.datetime(2002, 7, 4, 23, 30, 0, 250000, tzinfo=utc),
+    ]
+    spark.dataSource.register(make_avro_source())
+    out = str(tmp_path / "la_sink")
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        df = spark.createDataFrame(
+            [(i, ts) for i, ts in enumerate(instants)], "k bigint, ts timestamp"
+        )
+        df.repartition(1).write.format("avro_py").option("path", out).mode(
+            "overwrite"
+        ).save()
+        back = (
+            spark.read.format("avro_py")
+            .option("path", out)
+            .load()
+            .selectExpr("k", "unix_micros(ts) AS us", "cast(ts AS string) AS s")
+            .orderBy("k")
+            .collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+    micros = [int(ts.timestamp()) * 10**6 + ts.microsecond for ts in instants]
+    assert [r.us for r in back] == micros
+    # rendered in the session zone, as Spark renders any timestamp
+    assert [r.s for r in back] == [
+        "2001-02-02 20:05:06", "2002-07-04 16:30:00.25"
+    ]
+    (part,) = [f for f in os.listdir(out) if f.endswith(".avro")]
+    raw = list(read_container(os.path.join(out, part)))
+    assert [ts for _, ts in raw] == [t.replace(tzinfo=None) for t in instants]

@@ -182,59 +182,6 @@ def test_no_complex_output_columns(spark, sf_dir):
     assert not offenders, f"complex-typed output columns: {offenders}"
 
 
-def test_driver_window_rotation():
-    """The first 50 registry keys must be exactly the round-15 driver-window
-    list — the grading driver records only the first 50. Round-15 contract
-    (VERDICT r14 item 1), auto-derived by tools/driver_staleness.py: all
-    38 round-14 post-freeze keys first (never-checked > stale-green),
-    then the 12 oldest r8-stale keys (38 + 12 = 50). Every key that has
-    never PASSED a driver check (no row, or a hard-failed row) must be
-    inside the window or declared in _POST_WINDOW_ADDITIONS."""
-    import json
-    from pathlib import Path
-
-    from t_mobile_data_fnt_etl_pipeline_aws_spark.registry import _DRIVER_WINDOW
-
-    keys = list(QUERIES)
-    assert len(_DRIVER_WINDOW) == 50
-    assert keys[: len(_DRIVER_WINDOW)] == _DRIVER_WINDOW
-
-    # Only rows that actually passed count as verified: hash-green, or the
-    # documented rows-only degradation with matching row counts.
-    verified = set()
-    root = Path(__file__).resolve().parent.parent
-    # CORRECTNESS_r*.json, numerically sorted (r10+ must not fall out of
-    # the glob — an r0* pattern silently drops double-digit rounds).
-    correctness = sorted(
-        root.glob("CORRECTNESS_r*.json"),
-        key=lambda p: int("".join(c for c in p.stem if c.isdigit())),
-    )
-    assert any(
-        int("".join(c for c in p.stem if c.isdigit())) >= 10 for p in correctness
-    ), "double-digit CORRECTNESS rounds missing from the glob"
-    for p in correctness:
-        data = json.loads(p.read_text())
-        verified |= {
-            k
-            for k, v in data.items()
-            if v.get("hash_match")
-            or (v.get("err") == "no_oracle" and v.get("rows_match") is not False)
-        }
-    # Keys added after the window froze are exempt — they are declared in
-    # _POST_WINDOW_ADDITIONS and head the round-5 rotation.
-    from t_mobile_data_fnt_etl_pipeline_aws_spark.registry import (
-        _POST_WINDOW_ADDITIONS,
-    )
-
-    never_passed = [k for k in keys if k not in verified]
-    missing = [
-        k
-        for k in never_passed
-        if k not in _DRIVER_WINDOW and k not in _POST_WINDOW_ADDITIONS
-    ]
-    assert not missing, f"never-driver-verified keys outside the window: {missing}"
-
-
 def test_shingles_short_docs_yield_empty(spark):
     """Docs with < 3 tokens must shingle to [] (clamped slice), not crash:
     slice() with a negative length throws at runtime and the
@@ -4570,12 +4517,12 @@ def test_local_checkpoints_carry_row_caps():
     for p in sorted(root.rglob("*.py")):
         lines = p.read_text().splitlines()
         for i, ln in enumerate(lines):
-            if ".localCheckpoint()" in ln:
+            if ".localCheckpoint(" in ln:
                 window = "\n".join(lines[max(0, i - 8) : i + 1])
                 if "row-cap:" not in window:
                     offenders.append(f"{p.relative_to(root)}:{i + 1}")
     assert not offenders, (
-        "localCheckpoint() without a documented row-cap (use "
+        "localCheckpoint call without a documented row-cap (use "
         "functions.dfutil.materialized for corpus-sized intermediates): "
         f"{offenders}"
     )
