@@ -985,8 +985,14 @@ def _skew_aqe_confs() -> dict[str, str]:
     At real scale the defaults (factor 5, 256 MB threshold) are right;
     here the hot partition is only ~hundreds of KB, so the detector
     thresholds shrink with the data. Shared by the query and its plan
-    contract (tests/test_plans.py::test_join_skew_aqe_plan)."""
+    contract (tests/test_plans.py::test_join_skew_aqe_plan).
+
+    The join's shuffle width is pinned too, not left to the session's
+    cores: over N reduce partitions the hot one holds 0.3 + 0.7/N of the
+    rows against 0.7/N for the others, which clears factor 2 only from
+    N = 3 on, so a 2-core session would hide the skew."""
     return {
+        "spark.sql.shuffle.partitions": "8",
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",

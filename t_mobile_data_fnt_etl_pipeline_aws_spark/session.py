@@ -1,9 +1,21 @@
 """SparkSession construction and the runtime configuration contract.
 
 Two entry modes:
-  * ``get_spark()``      — our own session (tests, bench): local[N], AQE on.
+  * ``get_spark()``      — our own session (tests, bench): local[N], AQE on,
+    shuffle width = the session's cores.
   * ``configure(spark)`` — applied to ANY session (including the driver's)
-    before reading fixture tables; sets only runtime-settable SQL confs.
+    before reading fixture tables; sets only runtime-settable SQL confs and
+    never the caller's shuffle width.
+
+Shuffle width: ``spark.sql.shuffle.partitions`` equals the session's cores
+(``defaultParallelism``, i.e. the N of ``local[N]``). Batch queries may let
+AQE coalesce it further, but stateful streaming queries run without AQE, so
+this is the number of state stores, their commit tasks and the
+``transformWithStateInPandas`` Python workers per micro-batch. A streaming
+query fixes that width into its checkpoint when the checkpoint is created;
+a restart from an existing checkpoint keeps the width it was created with.
+``configure()`` leaves a caller's width alone: it runs on other people's
+sessions, and its value would be baked into their checkpoints.
 
 Config rationale (SURVEY.md §0.2, §4):
   * ``spark.sql.legacy.parquet.nanosAsLong`` — events.ts is parquet
@@ -54,19 +66,22 @@ def get_spark(app_name: str = "spark-graft-engine") -> SparkSession:
     """Build the engine's own local session.
 
     Parallelism comes from ``SPARK_GRAFT_CPUS`` (bench contract) or ``*``.
-    Shuffle partitions default to the core count — at 100 TB this would be
-    sized to ~128 MB per post-shuffle partition instead; AQE coalescing makes
-    the small-scale value non-critical.
+    Shuffle partitions are set to the session's cores
+    (``sparkContext.defaultParallelism``): one task per core in every
+    shuffle stage and one state store per core in every streaming query
+    whose checkpoint this session creates. At 100 TB this would be sized to
+    ~128 MB per post-shuffle partition instead.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "").strip() or "*"
-    shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", shuffle)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    )
     return configure(spark)

@@ -1,8 +1,12 @@
 """Canonical table schemas + loaders (SURVEY.md §1, FIXTURES.md).
 
 Schema-on-read with a fixed contract: parquet footers are the source of
-truth, but every load asserts the inferred schema matches the canonical
+truth, but every load asserts the footer schema matches the canonical
 StructType below, so silent drift fails fast (SURVEY.md §1 "schema system").
+The footer is read on the driver (``pyarrow.parquet.read_schema``), mapped to
+the physical Spark type of each column and handed to the reader as its
+schema, so a load submits no Spark job: Spark's own schema inference would
+run one job per load to read that same footer.
 
 events.ts special case: fixture generations differ — some write parquet
 TIMESTAMP(NANOS) (Spark 4 reads it only as raw int64 nanos via
@@ -18,9 +22,23 @@ exactly in both layouts.
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructType, TimestampNTZType
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 from ..session import configure
 
@@ -57,19 +75,63 @@ SCHEMAS: dict[str, str] = {
 }
 
 
+#: Footer (Arrow) column types of the canonical schemas and their Spark read
+#: types; any other column type is drift.
+_PLAIN_TYPES: dict[pa.DataType, DataType] = {
+    pa.int32(): IntegerType(),
+    pa.int64(): LongType(),
+    pa.float32(): FloatType(),
+    pa.float64(): DoubleType(),
+    pa.string(): StringType(),
+    pa.large_string(): StringType(),
+}
+
+
 def table_names() -> list[str]:
     return list(SCHEMAS)
+
+
+def _spark_type(t: pa.DataType) -> DataType | None:
+    """The type Spark reads a parquet column of footer type ``t`` as, under
+    the ``configure()`` confs; None for a type outside the canonical
+    schemas."""
+    if pa.types.is_timestamp(t):
+        if t.unit == "ns":
+            return LongType()  # nanosAsLong: the raw int64 nanos
+        # isAdjustedToUTC=false (no tz) is TIMESTAMP_NTZ under
+        # inferTimestampNTZ; a UTC-adjusted instant is TIMESTAMP
+        return TimestampType() if t.tz else TimestampNTZType()
+    if pa.types.is_list(t):
+        elem = _spark_type(t.value_type)
+        return None if elem is None else ArrayType(elem, t.value_field.nullable)
+    return _PLAIN_TYPES.get(t)
+
+
+def _footer_schema(path: str, name: str) -> StructType:
+    """The physical Spark schema of one parquet file, read on the driver."""
+    fields = []
+    for f in pq.read_schema(path):
+        t = _spark_type(f.type)
+        if t is None:
+            raise ValueError(
+                f"schema drift for table {name!r}: column {f.name!r} has "
+                f"parquet type {f.type}"
+            )
+        fields.append(StructField(f.name, t))
+    return StructType(fields)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table with the canonical schema contract.
 
-    Plain ``spark.read.parquet`` (vectorized columnar scan; predicate
-    pushdown and column pruning stay available to Catalyst because we add no
-    opaque transforms here) plus the events ns→µs normalization.
+    Plain ``spark.read.parquet`` with the footer's schema declared
+    (vectorized columnar scan; predicate pushdown and column pruning stay
+    available to Catalyst because we add no opaque transforms here) plus the
+    events ns→µs normalization.
     """
     configure(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(_footer_schema(path, name)).parquet(path)
     if name == "events":
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, LongType):
@@ -80,8 +142,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 "ts", F.expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)")
             )
         elif not isinstance(ts_type, TimestampNTZType):
-            # TIMESTAMP(MICROS) read as tz-adjusted TIMESTAMP (when
-            # inferTimestampNTZ is off): identity cast under UTC session.
+            # UTC-adjusted TIMESTAMP(MICROS) read as TIMESTAMP: identity
+            # cast under the UTC session.
             df = df.withColumn("ts", F.col("ts").cast(TimestampNTZType()))
         df = df.select("event_id", "ts", "user_id", "event_type", "value", "props")
     expected = StructType.fromDDL(SCHEMAS[name])
