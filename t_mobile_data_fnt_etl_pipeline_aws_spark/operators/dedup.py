@@ -656,13 +656,23 @@ def prefix_filter_jaccard_pairs(tok: DataFrame, num: int, den: int) -> DataFrame
     # pairs from a full token self-join (prefix filtering is lossless,
     # so the outputs are identical by construction). The driver's gate
     # runs at sf0.01, where the corpus is 500 docs — the same quadratic
-    # budget the bounded oracle already spends.
+    # budget the bounded oracle already spends. Above those 500 documents
+    # the unbounded self-join is unproven and grinds, so the guard CTE
+    # raises before it runs.
     oracle="""
-    WITH tok AS (
+    WITH guard AS (
+        SELECT CASE WHEN count(*) > 500
+                    THEN error('q_dedup_pairs_full oracle: documents holds '
+                               || count(*) || ' rows; its O(n^2) token '
+                               || 'self-join is proven only up to 500')
+                    ELSE 0 END AS ok
+        FROM documents
+    ),
+    tok AS (
         SELECT DISTINCT doc_id, token
         FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token
-              FROM documents)
-        WHERE token <> ''
+              FROM documents), guard
+        WHERE token <> '' AND guard.ok = 0
     ),
     sizes AS (SELECT doc_id, count(*) AS sz FROM tok GROUP BY doc_id),
     ij AS (
@@ -695,7 +705,8 @@ def q_dedup_pairs_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact portable values, so the unbounded token-join oracle above
     verifies it directly at the driver's sf0.01 gate (500 docs there —
     the same quadratic budget the bounded twin's oracle spends; the
-    lossless prefix filter provably changes nothing). Also verified by
+    lossless prefix filter provably changes nothing; on a larger corpus
+    the oracle raises instead of running). Also verified by
     invariants (tests/test_invariants.py::test_dedup_pairs_full_invariants):
     (a) restricted to doc_id < 500 the result equals the
     hash-oracled bounded key EXACTLY (same machinery, same τ — the

@@ -49,8 +49,7 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     the r11 driver drift flag (0.23 -> 0.67 s) is jitter on a sub-0.5 s
     key — source untouched since r6, and the anchor-normalized ratio
     has bounced 0.15-0.37 across 19 recorded runs; the dual-anchor
-    re-measure landed 0.28, mid-band. bench.py's prior is now the
-    median of the last 5 records, which retires this flag class.
+    re-measure landed 0.28, mid-band.
     """
     e = load(spark, sf_dir, "events")
     return (

@@ -6,6 +6,7 @@ inner loop; CI/milestone runs use sf0.01 to mirror the driver's gate).
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 
@@ -16,6 +17,7 @@ sys.path.insert(0, REPO_ROOT)
 
 from t_mobile_data_fnt_etl_pipeline_aws_spark import get_spark  # noqa: E402
 from t_mobile_data_fnt_etl_pipeline_aws_spark.oracle import duck_connect  # noqa: E402
+from t_mobile_data_fnt_etl_pipeline_aws_spark.registry import all_queries  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
@@ -29,6 +31,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def built_query(spark, sf_dir):
+    """key -> that key's DataFrame, built on first use and kept for the
+    session, so the schema and plan sweeps over every key pay each key's
+    eager build once between them."""
+    queries = all_queries()
+
+    @functools.cache
+    def build(key: str):
+        return queries[key](spark, sf_dir)
+
+    return build
 
 
 @pytest.fixture(scope="session")

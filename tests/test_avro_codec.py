@@ -18,6 +18,7 @@ from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.avro_python import (
     AVRO_MAGIC,
     _read_long,
     _write_long,
+    make_avro_source,
     pa_schema_from_avro,
     read_container_arrow,
     read_container_arrow_resolved,
@@ -333,28 +334,11 @@ def test_read_container_arrow_resolved_matches_row_resolved(tmp_path):
     assert got == [tuple(r) for r in ref]
 
 
-def test_row_path_writer_commits(tmp_path):
+def test_row_path_writer_commits(spark, tmp_path):
     """ADVICE r15 (high): the avro_py writer must promote its staged
     files and write _SUCCESS, here for a tz-aware TimestampType schema.
     Exercised through a real Spark write so the two-phase commit
     protocol runs."""
-    import datetime
-
-    import pytest
-
-    pyspark = pytest.importorskip("pyspark")
-    from pyspark.sql import SparkSession
-
-    from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.avro_python import (
-        make_avro_source,
-    )
-
-    spark = (
-        SparkSession.builder.master("local[2]")
-        .appName("avro-rowpath-commit")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.dataSource.register(make_avro_source())
     out = str(tmp_path / "tz_sink")
@@ -366,8 +350,6 @@ def test_row_path_writer_commits(tmp_path):
     df.repartition(1).write.format("avro_py").option("path", out).mode(
         "overwrite"
     ).save()
-    import os
-
     assert os.path.exists(os.path.join(out, "_SUCCESS")), (
         "avro_py writer did not commit"
     )
@@ -496,10 +478,6 @@ def test_timestamp_micros_reads_as_utc_instant(tmp_path):
 def test_spark_reads_null_second_union(spark, tmp_path):
     """spark.read.format("avro_py") over a reference-written file whose
     unions are all [T, "null"]."""
-    from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.avro_python import (
-        make_avro_source,
-    )
-
     types = sorted(_UNION_VALUES)
     schema = {
         "type": "record",
@@ -525,10 +503,6 @@ def test_timestamp_writer_any_session_timezone(spark, tmp_path):
     """Under a non-UTC session timezone the writer still stores the UTC
     instant (spec timestamp-micros): the reference reader decodes the
     same micros Spark holds, and avro_py reads the instants back."""
-    from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.avro_python import (
-        make_avro_source,
-    )
-
     utc = datetime.timezone.utc
     instants = [
         datetime.datetime(2001, 2, 3, 4, 5, 6, tzinfo=utc),

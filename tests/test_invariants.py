@@ -54,6 +54,24 @@ def test_dedup_pairs_full_invariants(spark, sf_dir):
         assert jacc == n_common / (sz_a + sz_b - n_common)
 
 
+def test_dedup_pairs_full_oracle_refuses_unproven_scale():
+    """The q_dedup_pairs_full oracle's O(n²) token self-join is proven at
+    500 documents; one document more must raise, naming key and limit,
+    instead of grinding."""
+    import duckdb
+
+    from t_mobile_data_fnt_etl_pipeline_aws_spark.registry import all_oracles
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT range AS doc_id, "
+        "'tok ' || (range % 7) AS text FROM range(501)"
+    )
+    with pytest.raises(duckdb.InvalidInputException, match=r"q_dedup_pairs_full.*500"):
+        con.execute(all_oracles()["q_dedup_pairs_full"]).fetchall()
+    con.close()
+
+
 def test_union_all_is_sum_of_slices(spark, sf_dir):
     a_plus_b = QUERIES["q_union_all"](spark, sf_dir).count()
     o = load(spark, sf_dir, "orders")
@@ -162,16 +180,16 @@ def test_vectorized_ann_matches_hof_ranking(spark, sf_dir):
         assert round(a.cosine, 6) == b.cosine, (a, b)
 
 
-def test_no_complex_output_columns(spark, sf_dir):
+def test_no_complex_output_columns(built_query):
     """No registered query may emit array/map/struct columns: the driver's
     canonicalizer pandas-sorts outputs and ndarray cells are unhashable
-    (round-1 q_agg_collect_sorted hard fail). Schema derivation only — no
-    jobs run."""
+    (round-1 q_agg_collect_sorted hard fail). Schema derivation only; the
+    builds are shared with test_plans.py's window sweep."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
     offenders = {}
-    for key, fn in QUERIES.items():
-        schema = fn(spark, sf_dir).schema
+    for key in QUERIES:
+        schema = built_query(key).schema
         bad = [
             f.name
             for f in schema.fields
@@ -1343,255 +1361,6 @@ def test_triangle_counts_match_brute_force(spark, sf_dir):
     assert sum(got.values()) == 3 * n_tri
 
 
-def test_bench_compact_summary_fits_tail_capture():
-    """bench.py's LAST stdout line must parse inside the driver's ~2 KB
-    tail capture even with a worst-case registry: long key names, many
-    regressions. No Spark involved — pure helper contract."""
-    import json
-    import sys
-
-    sys.path.insert(0, str(__import__("pathlib").Path(__file__).parent.parent))
-    from bench import compact_summary
-
-    timings = {f"q_very_long_operator_name_{i:03d}": i * 0.1234 for i in range(250)}
-    payload = {
-        "metric": "total_seconds_noop_materialize_sum_of_medians",
-        "value": round(sum(timings.values()), 4),
-        "unit": "sec",
-        "queries": timings,
-        "sf": 0.1,
-        "regressions": {
-            k: {"prior": 0.1, "now": 9.9, "ratio": 99.0}
-            for k in list(timings)[:40]
-        },
-    }
-    line = json.dumps(compact_summary(payload))
-    assert len(line) < 1800, len(line)
-    parsed = json.loads(line)
-    assert parsed["n_queries"] == 250
-    assert parsed["n_regressions"] == 40
-    assert len(parsed["queries"]) == 10
-    assert len(parsed["regressions"]) == 5
-
-
-def test_bench_prior_is_median_of_history(tmp_path):
-    """load_prior_timings must take the per-key MEDIAN of the last N
-    records, not the newest record (VERDICT r11 item 2): a full-sweep
-    record holding one all-time-fastest sample for a sub-0.4 s key used
-    to become the sole prior and fire a phantom drift flag next run
-    (r11 token_stats adjudication). Also pins: newest-first ordering,
-    the driver 'parsed' wrapper shape, and skipping unusable records.
-    No Spark involved."""
-    import json as _json
-    import sys
-
-    sys.path.insert(0, str(__import__("pathlib").Path(__file__).parent.parent))
-    from bench import _PRIOR_HISTORY_N, load_prior_timings
-
-    metric = "total_seconds_noop_materialize_sum_of_medians"
-    # 6 rounds of history for q_a; q_b appears only in the newest record
-    # (a fresh key must still get a prior). r6's q_a=0.1 is the lucky
-    # outlier that used to define the prior.
-    samples = {1: 0.40, 2: 0.38, 3: 0.44, 4: 0.41, 5: 0.39, 6: 0.10}
-    for r, v in samples.items():
-        rec = {"metric": metric, "queries": {"q_a": v}}
-        if r == 6:
-            rec["queries"]["q_b"] = 1.5
-        if r == 4:  # driver wrapper shape
-            rec = {"parsed": rec}
-        (tmp_path / f"BENCH_LOCAL_r{r:02d}.json").write_text(_json.dumps(rec))
-    # unusable records must be skipped, not crash the scan
-    (tmp_path / "BENCH_LOCAL_r07.json").write_text("not json{")
-    (tmp_path / "BENCH_r08.json").write_text(_json.dumps({"parsed": None}))
-
-    prior = load_prior_timings(str(tmp_path))
-    # q_a: newest N=5 samples are rounds 2..6 -> median of
-    # [0.38, 0.44, 0.41, 0.39, 0.10] = 0.39 — the outlier no longer wins
-    assert _PRIOR_HISTORY_N == 5
-    assert prior["q_a"] == 0.39
-    assert prior["q_b"] == 1.5
-
-
-def test_bench_drift_gate_is_contention_immune():
-    """confirm_regressions must cancel host-speed artifacts (everything
-    uniformly slower, anchors included) and keep true regressions (one
-    key slower while the anchors hold) — the ratio-of-ratios gate
-    (VERDICT r6 item 2; round 6 burned hours on three spurious flags
-    from cross-round raw-seconds comparison), now with TWO independent
-    anchors (VERDICT r8 item 4): an anchor-local regression surfaces as
-    an anchor_regression entry (adjudicated by the other anchor) instead
-    of silently self-normalizing away. VERDICT r12 item 3: the divisor
-    is the MIN of the anchor host factors — a single self-inflated
-    anchor must not shield real regressions (in r12, max() with a 2.1x
-    outlier anchor would have cleared anything up to ~3x) — and cleared
-    flags come back with their adjudication evidence instead of
-    vanishing. No Spark involved."""
-    import sys
-
-    sys.path.insert(0, str(__import__("pathlib").Path(__file__).parent.parent))
-    from bench import (
-        ANCHOR_CLASS,
-        ANCHOR_KEYS,
-        COMPUTE_BOUND,
-        confirm_regressions,
-        find_regressions,
-    )
-
-    # The first two anchors are the scan/shuffle pair; the third (r15) is
-    # the compute proxy, exercised separately in the class-matching cases
-    # below (it has no prior in these fixtures, so the original dual-anchor
-    # semantics are preserved bit-for-bit for cases 1-8).
-    a1, a2, a3 = ANCHOR_KEYS
-    assert ANCHOR_CLASS[a3] == "compute"
-    prior = {a1: 1.0, a2: 0.5, "q_x": 2.0, "q_y": 0.8}
-
-    # Case 1: busier host — everything (anchors included) reruns 1.8x
-    # slower than the prior round. Raw gate flags all; the confirmation
-    # pass must clear all (anchors normalize each other, keys divide by
-    # the common host factor) AND record the cleared flags' evidence.
-    host_now = {a1: 1.8, a2: 0.9, "q_x": 3.6, "q_y": 1.44}
-    raw = find_regressions(host_now, prior)
-    assert set(raw) == {a1, a2, "q_x", "q_y"}
-    confirmed, cleared = confirm_regressions(
-        raw, prior, rerun=lambda k: host_now[k]
-    )
-    assert confirmed == {}, confirmed
-    assert set(cleared) == {a1, a2, "q_x", "q_y"}
-    assert cleared["q_x"]["adj_ratio"] == 1.0
-    assert cleared["q_x"]["host_factor"] == 1.8
-
-    # Case 2: true regression — q_x is 3x slower while both anchors
-    # (and the rerun) hold at prior speed. Must survive confirmation
-    # with the adjusted ratio reported.
-    true_now = {a1: 1.0, a2: 0.5, "q_x": 6.0, "q_y": 0.8}
-    raw = find_regressions(true_now, prior)
-    assert set(raw) == {"q_x"}
-    confirmed, cleared = confirm_regressions(
-        raw, prior, rerun=lambda k: true_now[k]
-    )
-    assert set(confirmed) == {"q_x"}
-    assert cleared == {}
-    assert confirmed["q_x"]["adj_ratio"] == 3.0
-    assert confirmed["q_x"]["host_factor"] == 1.0
-    assert "anchor_regression" not in confirmed["q_x"]
-
-    # Case 3: no anchor prior — raw flags pass through unconfirmed
-    # rather than silently dropping the gate.
-    raw = find_regressions(true_now, {"q_x": 2.0})
-    assert confirm_regressions(raw, {"q_x": 2.0}, rerun=None) == (raw, {})
-
-    # Case 4: mixed — host 1.5x slower AND q_x genuinely 3x: adj ratio
-    # 4.5/1.5 = 3.0 still trips the 1.5x gate; q_y (host-only) clears.
-    mixed_now = {a1: 1.5, a2: 0.75, "q_x": 9.0, "q_y": 1.2}
-    raw = find_regressions(mixed_now, prior)
-    confirmed, _ = confirm_regressions(raw, prior, rerun=lambda k: mixed_now[k])
-    assert set(confirmed) == {"q_x"}, confirmed
-
-    # Case 5: ANCHOR-local regression — a1 alone is 2x slower while a2
-    # and every key hold: the old single-anchor gate silently dropped
-    # this (ADVICE r7 item 2); now a2 adjudicates and the flag surfaces
-    # tagged anchor_regression.
-    anc_now = {a1: 2.0, a2: 0.5, "q_x": 2.0, "q_y": 0.8}
-    raw = find_regressions(anc_now, prior)
-    assert set(raw) == {a1}
-    confirmed, _ = confirm_regressions(raw, prior, rerun=lambda k: anc_now[k])
-    assert set(confirmed) == {a1}
-    assert confirmed[a1]["anchor_regression"] is True
-    assert confirmed[a1]["adj_ratio"] == 2.0
-
-    # Case 6 (FLIPPED by VERDICT r12 item 3): a1 self-inflates to 1.8x
-    # while a2 holds and q_x reruns at a true 2.0x. Under the old max()
-    # divisor the inflated anchor normalized q_x to 2.0/1.8 = 1.11 and
-    # cleared it — exactly how r12's 2.1x anchor would have hidden any
-    # real regression up to ~3x. With the min() divisor the healthy
-    # anchor adjudicates: q_x confirms at 2.0, and a1 itself surfaces
-    # as an anchor_regression (a2 says the host is fine).
-    jitter_now = {a1: 1.8, a2: 0.5, "q_x": 4.0, "q_y": 0.8}
-    raw = find_regressions(jitter_now, prior)
-    assert set(raw) == {a1, "q_x"}
-    confirmed, _ = confirm_regressions(raw, prior, rerun=lambda k: jitter_now[k])
-    assert set(confirmed) == {a1, "q_x"}, confirmed
-    assert confirmed[a1]["anchor_regression"] is True
-    assert confirmed["q_x"]["adj_ratio"] == 2.0
-    assert confirmed["q_x"]["host_factor"] == 1.0
-
-    # Case 7: single-anchor prior and the flagged key IS that anchor —
-    # nothing independent to normalize by; the raw flag passes through
-    # tagged anchor_regression rather than being dropped.
-    solo_prior = {a1: 1.0}
-    solo_now = {a1: 2.0}
-    raw = find_regressions(solo_now, solo_prior)
-    confirmed, _ = confirm_regressions(
-        raw, solo_prior, rerun=lambda k: solo_now[k]
-    )
-    assert set(confirmed) == {a1}
-    assert confirmed[a1]["anchor_regression"] is True
-
-    # Case 8: REPLAY OF THE ACTUAL r12 RECORD (VERDICT r12 item 3's
-    # done-criterion). Marathon readings: the primary anchor
-    # self-inflated to 2.1x (2.97 s vs a 1.41 s prior) while a2 read
-    # 1.1x; three latency-floor keys read 1.5-2.1x. The absolute-delta
-    # floor (r13) already absorbs the two smallest (string_funcs +0.25 s
-    # and union_all +0.13 s never leave the raw gate — both re-pinned at
-    # their historic floors on a quiet host); the remaining raw flags
-    # rerun fresh-JVM at near-prior speeds (the judge re-measured
-    # q_agg_hash at 1.48 s) and the gate must confirm NOTHING while
-    # recording the cleared flags with their adjudication evidence.
-    r12_prior = {a1: 1.41, a2: 0.50, "q_string_funcs": 0.22,
-                 "q_udf_map_in_arrow": 0.60, "q_union_all": 0.23}
-    r12_marathon = {a1: 2.97, a2: 0.55, "q_string_funcs": 0.47,
-                    "q_udf_map_in_arrow": 1.14, "q_union_all": 0.36}
-    r12_fresh = {a1: 1.48, a2: 0.55, "q_string_funcs": 0.25,
-                 "q_udf_map_in_arrow": 0.65, "q_union_all": 0.25}
-    raw = find_regressions(r12_marathon, r12_prior)
-    assert set(raw) == {a1, "q_udf_map_in_arrow"}
-    confirmed, cleared = confirm_regressions(
-        raw, r12_prior, rerun=lambda k: r12_fresh[k]
-    )
-    assert confirmed == {}, confirmed
-    assert set(cleared) == set(raw)
-    for k, info in cleared.items():
-        assert info["adj_ratio"] <= 1.5, (k, info)
-        assert "rerun" in info and "host_factors" in info
-
-    # Case 9: CLASS-MATCHED normalization (VERDICT r14 item 2 — the r14
-    # drift shape). CPUs contended: scan/shuffle anchors read ~1.0 while
-    # the compute anchor reads 1.6x and a compute-bound key drifts 1.7x
-    # with its code untouched. The old min-over-all-anchors divisor
-    # (≈1.0) confirmed it (r14 burned three adjudication essays on 31
-    # such flags); the compute anchor must now clear it. A non-compute
-    # key with the same raw ratio still confirms (the scan anchors say
-    # the host is fine for ITS class).
-    kc = "q_cluster_kmeans"
-    assert kc in COMPUTE_BOUND and "q_x" not in COMPUTE_BOUND
-    c_prior = {a1: 1.0, a2: 0.5, a3: 2.0, kc: 2.0, "q_x": 2.0}
-    c_now = {a1: 1.02, a2: 0.51, a3: 3.2, kc: 3.4, "q_x": 3.4}
-    raw = find_regressions(c_now, c_prior)
-    assert set(raw) == {a3, kc, "q_x"}
-    confirmed, cleared = confirm_regressions(
-        raw, c_prior, rerun=lambda k: c_now[k]
-    )
-    assert kc in cleared, (confirmed, cleared)
-    assert cleared[kc]["host_factor"] == 1.6
-    assert "q_x" in confirmed and confirmed["q_x"]["host_factor"] == 1.02
-    # the compute anchor's own drift is adjudicated by the OTHER anchors
-    # (scan class) and surfaces as an anchor_regression — a compute-wide
-    # code regression can't hide behind self-normalization.
-    assert a3 in confirmed and confirmed[a3]["anchor_regression"] is True
-
-    # Case 10: a compute-bound key genuinely regresses while the compute
-    # anchor holds — the class-matched divisor (~1.0) must CONFIRM it.
-    t_prior = {a1: 1.0, a2: 0.5, a3: 2.0, kc: 2.0}
-    t_now = {a1: 1.0, a2: 0.5, a3: 2.05, kc: 6.0}
-    raw = find_regressions(t_now, t_prior)
-    assert set(raw) == {kc}
-    confirmed, cleared = confirm_regressions(
-        raw, t_prior, rerun=lambda k: t_now[k]
-    )
-    assert kc in confirmed and cleared == {}
-    assert confirmed[kc]["adj_ratio"] == round(3.0 / (2.05 / 2.0), 2)
-
-
 def test_equidepth_bins_tile_and_are_monotone(spark, sf_dir):
     """Decile histogram sanity: bins 1..10 all present, populations sum
     to |orders| and differ by at most 1 (equal-depth), and value ranges
@@ -1848,22 +1617,6 @@ def test_survey_registry_table_matches_registry():
     oracles = all_oracles()
     for k, kind in rows:
         assert (kind == "SQL") == (k in oracles), (k, kind)
-
-
-def test_anchors_in_headline():
-    """Every drift anchor must be in the default headline set: an anchor
-    missing from the record leaves the next round's confirm gate with no
-    prior for it, silently degrading dual-anchor adjudication back to
-    single-anchor (the round-9 first bench ran exactly so, and an
-    anchor-jitter artifact flag survived confirmation)."""
-    import sys
-
-    sys.path.insert(0, str(__import__("pathlib").Path(__file__).parent.parent))
-    from bench import ANCHOR_KEYS, HEADLINE
-
-    missing = [a for a in ANCHOR_KEYS if a not in HEADLINE]
-    assert not missing, f"anchors absent from HEADLINE: {missing}"
-    assert set(ANCHOR_KEYS) <= set(QUERIES)
 
 
 def test_python_sink_abort_leaves_no_committed_generation(spark, sf_dir):

@@ -138,7 +138,7 @@ def test_theta_bucketed_is_equi_join_not_nested_loop(spark, sf_dir):
     ), strategies
 
 
-def test_no_unpartitioned_window_over_raw_input(spark, sf_dir):
+def test_no_unpartitioned_window_over_raw_input(built_query):
     """No registered query may run a partition-less window over base-table
     rows — that funnels the whole input through ONE task at scale (the
     round-1 q_stream_watermark_late defect). The only allowed global
@@ -176,8 +176,8 @@ def test_no_unpartitioned_window_over_raw_input(spark, sf_dir):
         "q_stats_mann_whitney": 1,
     }
     offenders = {}
-    for key, fn in QUERIES.items():
-        plan = plan_string(fn(spark, sf_dir))
+    for key in QUERIES:
+        plan = plan_string(built_query(key))
         n = len(partitionless.findall(plan))
         if n > allowed.get(key, 0):
             offenders[key] = n

@@ -3,6 +3,8 @@ session's cores (session.py module docstring)."""
 
 from __future__ import annotations
 
+import os
+
 from t_mobile_data_fnt_etl_pipeline_aws_spark import get_spark
 from t_mobile_data_fnt_etl_pipeline_aws_spark.session import configure
 from t_mobile_data_fnt_etl_pipeline_aws_spark.streaming.harness import (
@@ -42,3 +44,10 @@ def test_stream_state_partitions_equal_session_cores(spark, sf_dir, tmp_path):
     assert [(r.operatorName, r.numPartitions) for r in md] == [
         ("dedupe", spark.sparkContext.defaultParallelism)
     ]
+
+
+def test_session_master_follows_spark_graft_cpus(spark):
+    """The suite's shared session is the configured one: a test that
+    builds its own session first would pin every later test to its width."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "").strip() or "*"
+    assert spark.sparkContext.master == f"local[{cpus}]"
